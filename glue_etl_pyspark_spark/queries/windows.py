@@ -231,12 +231,13 @@ def events_rolling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.expr("to_unix_timestamp(ts)").alias("sec"),
     )
-    home = base.withColumn("blk", F.expr(f"sec div {_ROLL_BLOCK}")).withColumn(
-        "ctx", F.lit(False)
-    )
+    # floor/pmod, not div/%: both truncate toward zero, which would
+    # merge the two days around 1970 and never spill a pre-1970 hour
+    blk = F.expr(f"floor(sec / {_ROLL_BLOCK})")
+    home = base.withColumn("blk", blk).withColumn("ctx", F.lit(False))
     spill = (
-        base.filter(F.col("sec") % _ROLL_BLOCK >= _ROLL_BLOCK - 3600)
-        .withColumn("blk", F.expr(f"sec div {_ROLL_BLOCK}") + 1)
+        base.filter(F.expr(f"pmod(sec, {_ROLL_BLOCK})") >= _ROLL_BLOCK - 3600)
+        .withColumn("blk", blk + 1)
         .withColumn("ctx", F.lit(True))
     )
     u = home.unionByName(spill)
