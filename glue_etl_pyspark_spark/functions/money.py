@@ -1,4 +1,4 @@
-"""Order-independent money aggregation.
+"""Order-independent money aggregation — the one money-sum path.
 
 A double SUM's result depends on summation order: partial-aggregate
 tree shape, partition count, engine. At sf0.01 the drift hides under a
@@ -7,19 +7,23 @@ across engines and the same query becomes flaky — caught by the
 full-registry parity sweep at sf0.1. At 100 TB the drift is worse and
 also RUN-dependent (AQE re-plans change the tree shape).
 
-``dsum`` accumulates in DECIMAL instead: each per-row double product
-is cast once to a fixed-scale decimal (deterministic per-row, both
-engines agree), and decimal addition is exact and associative — the
-sum is bit-identical regardless of partitioning, plan shape, or
-engine. The result is cast back to double so output schemas stay
-engine-neutral. DuckDB oracle twin:
-``CAST(SUM(CAST(expr AS DECIMAL(28,6))) AS DOUBLE)``.
+``msum`` floor-scales each per-row double to integer micro-units
+(``floor(x*1e6 + 0.5)``: exact IEEE ops, bit-identical on Spark and
+DuckDB per the repo's floor-scaling rule — unlike a decimal cast, which
+splits on .5e-6 boundaries: Spark rounds the printed digits, DuckDB the
+binary value) and accumulates those integers in DECIMAL(38,0). Integer
+addition is exact and associative, so the sum is bit-identical
+regardless of partitioning, plan shape, or engine; the result comes
+back as a double so output schemas stay engine-neutral. DECIMAL(38,0)
+never overflows where an ANSI long SUM would die (~9.2e12 money
+units), and the long->Decimal path stays compact until the running
+total tops 18 digits. Measured at sf0.1 (q1, 4 sums over 600k rows):
+the older per-row decimal-cast sum 1.12 s -> msum 0.82 s; a plain long
+sum is 0.59 s but overflows at scale, a plain double sum is
+order-dependent.
 
-DECIMAL(28,6) per-element keeps 22 integer digits (a narrower 18,6
-would return NULL SILENTLY past 1e12 per value under non-ANSI
-overflow); Spark widens the sum to DECIMAL(38,6). Width is free:
-measured 0.057s vs 0.076s for 18,6 over 600k rows — the sum buffer is
-non-compact either way. Same money-math stance as ``agg_decimal_exact``.
+``MSUM_SQL`` is the same sum as SQL text, used verbatim by every
+DuckDB oracle and every ``spark.sql`` body (both engines accept it).
 """
 
 from __future__ import annotations
@@ -27,35 +31,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-DSUM_SQL = "CAST(SUM(CAST({expr} AS DECIMAL(28,6))) AS DOUBLE)"
+MSUM_SQL = "(CAST(SUM(CAST(floor({expr} * 1e6 + 0.5) AS DECIMAL(38,0))) AS DOUBLE) / 1e6)"
 
 
-def dsum(expr: Column, scale: str = "decimal(28,6)") -> Column:
-    """Exact, order-independent sum of a money-valued double column."""
-    return F.sum(expr.cast(scale)).cast("double")
-
-
-# ``msum`` — same order-independence guarantee as ``dsum``, ~30% less
-# per-row cost in the hot aggregate path. The double->decimal cast that
-# dsum pays per row goes through BigDecimal.valueOf(Double.toString) —
-# an allocation-heavy parse. msum instead floor-scales to integer
-# micro-units in pure double/long codegen (floor(x*1e6 + 0.5): exact
-# IEEE ops, bit-identical on both engines per the repo's floor-scaling
-# rule), then accumulates those longs in a DECIMAL(38,0) buffer: the
-# long->Decimal path stays compact (no BigDecimal until the running
-# total tops 18 digits = 1e12 money units, which only the largest
-# 100 TB group sums ever reach), while never overflowing where an ANSI
-# long SUM would die (~9.2e12 money units). Measured at sf0.1 (q1, 4
-# sums over 600k rows): dsum 1.12 s -> msum 0.82 s; plain long sum is
-# 0.59 s but overflows at scale, plain double sum is order-dependent.
-MSUM_SQL = "(CAST(SUM(CAST(floor({expr} * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6)"
-
-
-def msum(expr: Column, dp: int = 6) -> Column:
-    """Order-independent money sum via floor-scaled integer
-    accumulation (see module comment; DuckDB twin: ``MSUM_SQL``,
-    which matches only ``dp=6``)."""
-    scaled = F.floor(expr * F.lit(float(10**dp)) + F.lit(0.5))
-    return F.sum(scaled.cast("decimal(38,0)")).cast("double") / F.lit(
-        float(10**dp)
-    )
+def msum(expr: Column) -> Column:
+    """Order-independent sum of a money-valued double column (see
+    module docstring; SQL twin: ``MSUM_SQL``)."""
+    scaled = F.floor(expr * F.lit(1e6) + F.lit(0.5))
+    return F.sum(scaled.cast("decimal(38,0)")).cast("double") / F.lit(1e6)

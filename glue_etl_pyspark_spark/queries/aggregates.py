@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import msum
+from ..functions.money import MSUM_SQL, msum
 from ..io import load_table
 from ..registry import query
 
@@ -86,11 +86,11 @@ def agg_collect_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROLLUP_ORACLE = """
+ROLLUP_ORACLE = f"""
 SELECT o_orderstatus, o_orderpriority,
   CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
   CAST(COUNT(*) AS BIGINT) AS cnt,
-  (CAST(SUM(CAST(floor(o_totalprice * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6) AS sum_total
+  {MSUM_SQL.format(expr="o_totalprice")} AS sum_total
 FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
 """
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.money import MSUM_SQL, msum
 from ..io import load_table
 from ..registry import query
 
@@ -168,10 +169,10 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     return z.repartitionByRange(32, F.col("zval"))
 
 
-OBSERVE_ORACLE = """
+OBSERVE_ORACLE = f"""
 SELECT o_orderpriority,
   CAST(COUNT(*) AS BIGINT) AS n_orders,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS sum_price
+  {MSUM_SQL.format(expr="o_totalprice")} AS sum_price
 FROM orders
 WHERE o_orderstatus = 'O'
 GROUP BY o_orderpriority
@@ -188,8 +189,6 @@ def observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_plans.py (Observation.get after the action)."""
     from pyspark.sql import Observation
 
-    from ..functions.money import dsum
-
     orders = load_table(spark, sf_dir, "orders")
     obs = Observation("observe_metrics")
     observed = orders.observe(
@@ -204,7 +203,7 @@ def observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            dsum(F.col("o_totalprice")).alias("sum_price"),
+            msum(F.col("o_totalprice")).alias("sum_price"),
         )
     )
     # stash the Observation so a test (or caller) can read the metrics
@@ -213,13 +212,13 @@ def observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-SALTED_ORACLE = """
+SALTED_ORACLE = f"""
 WITH dim(event_type, weight) AS (
   VALUES ('click', 1.0), ('view', 0.2), ('purchase', 5.0),
          ('signup', 2.0), ('error', 0.0)
 )
 SELECT e.event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-  CAST(SUM(CAST(e.value * CAST(d.weight AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
+  {MSUM_SQL.format(expr="e.value * CAST(d.weight AS DOUBLE)")}
     AS weighted_value
 FROM events e JOIN dim d USING (event_type)
 GROUP BY e.event_type
@@ -236,7 +235,6 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the oracle checks: the result hash-matches a plain
     unsalted join + aggregate. event_type is the low-cardinality hot
     key; weights are an inline dimension (VALUES on both engines)."""
-    from ..functions.money import dsum
     from ..operators.skew import salted_join
 
     ev = load_table(spark, sf_dir, "events")
@@ -248,7 +246,7 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = salted_join(ev, dim, on="event_type", salt_cols=["event_id"], buckets=8)
     return j.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
-        dsum(F.col("value") * F.col("weight")).alias("weighted_value"),
+        msum(F.col("value") * F.col("weight")).alias("weighted_value"),
     )
 
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.money import MSUM_SQL
 from ..io import load_table, register_views
 from ..operators.record_ops import glue_filter, glue_map
 from ..registry import query
@@ -540,10 +541,10 @@ def events_ewma_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SALTED_AGG_ORACLE = """
+SALTED_AGG_ORACLE = f"""
 SELECT event_type,
   CAST(COUNT(*) AS BIGINT) AS event_cnt,
-  (CAST(SUM(CAST(floor(value * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6)
+  {MSUM_SQL.format(expr="value")}
     AS value_sum
 FROM events GROUP BY event_type
 """

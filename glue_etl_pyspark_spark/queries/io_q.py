@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import msum
+from ..functions.money import MSUM_SQL, msum
 from ..io import load_table, register_views
 from ..operators import drop_fields, rename_field, select_fields, spigot
 from ..registry import query
@@ -707,9 +707,9 @@ def scan_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MANIFEST_PRUNED_ORACLE = """
+MANIFEST_PRUNED_ORACLE = f"""
 SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-  (CAST(SUM(CAST(floor(o_totalprice * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6)
+  {MSUM_SQL.format(expr="o_totalprice")}
     AS sum_total
 FROM orders
 WHERE o_orderdate BETWEEN DATE '1996-01-01' AND DATE '1996-12-31'

@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from ..functions.money import dsum
+from ..functions.money import MSUM_SQL, msum
 from ..io import load_table
 from ..operators import asof_join, glue_join, range_join
 from ..registry import query
@@ -208,8 +208,8 @@ def join_non_equi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MULTIWAY_ORACLE = """
-SELECT n.n_name, CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue
+MULTIWAY_ORACLE = f"""
+SELECT n.n_name, {MSUM_SQL.format(expr="l.l_extendedprice * (1 - l.l_discount)")} AS revenue
 FROM lineitem l
 JOIN orders o ON l.l_orderkey = o.o_orderkey
 JOIN customer c ON o.o_custkey = c.c_custkey
@@ -246,7 +246,7 @@ def join_multiway_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(nation), customer["c_nationkey"] == nation["n_nationkey"])
         .join(broadcast(r), nation["n_regionkey"] == r["r_regionkey"])
         .groupBy("n_name")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
     )
 
 

@@ -12,18 +12,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import msum
+from ..functions.money import MSUM_SQL, msum
 from ..io import load_table
 from ..registry import query
 
-Q1_ORACLE = """
+Q1_ORACLE = f"""
 SELECT
   l_returnflag,
   l_linestatus,
   CAST(SUM(CAST(l_quantity AS BIGINT)) AS DOUBLE) AS sum_qty,
-  (CAST(SUM(CAST(floor(l_extendedprice * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6) AS sum_base_price,
-  (CAST(SUM(CAST(floor(l_extendedprice * (1 - l_discount) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6) AS sum_disc_price,
-  (CAST(SUM(CAST(floor(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6) AS sum_charge,
+  {MSUM_SQL.format(expr="l_extendedprice")} AS sum_base_price,
+  {MSUM_SQL.format(expr="l_extendedprice * (1 - l_discount)")} AS sum_disc_price,
+  {MSUM_SQL.format(expr="l_extendedprice * (1 - l_discount) * (1 + l_tax)")} AS sum_charge,
   AVG(l_quantity) AS avg_qty,
   AVG(l_extendedprice) AS avg_price,
   AVG(l_discount) AS avg_disc,
@@ -41,8 +41,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Filter is pushed to the parquet scan; aggregation is a
     partial+final HashAggregate pair (verify with .explain). Money
-    sums accumulate via ``msum`` (floor-scaled integer micro-units:
-    order-invariant like dsum, without the per-row BigDecimal parse);
+    sums accumulate via ``msum`` (floor-scaled integer micro-units,
+    order-invariant);
     quantity is integral, so a plain long sum is already exact.
     """
     li = load_table(spark, sf_dir, "lineitem")

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.money import MSUM_SQL
 from ..io import load_table, register_views
 from ..registry import query
 
@@ -671,18 +672,11 @@ def sql_scripting_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark 4 SQL pipe syntax (FROM ... |> op |> op)
 # ---------------------------------------------------------------------------
 
-# oracle (DuckDB) side: SUM(BIGINT) widens to HUGEINT — overflow-safe
-_PIPE_MSUM = "(CAST(SUM(CAST(floor(o_totalprice * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6)"
-# Spark side: SUM(BIGINT) stays BIGINT and would overflow at 100 TB
-# money volumes (~2e20 micro-units) — accumulate in DECIMAL(38,0),
-# identical values at any scale that fits (the msum discipline)
-_PIPE_MSUM_SPARK = "(CAST(SUM(CAST(floor(o_totalprice * 1e6 + 0.5) AS DECIMAL(38,0))) AS DOUBLE) / 1e6)"
-
 SQL_PIPE_ORACLE = f"""
 SELECT c_mktsegment,
   year(o_orderdate) AS o_year,
   CAST(COUNT(*) AS BIGINT) AS n_orders,
-  {_PIPE_MSUM} AS revenue
+  {MSUM_SQL.format(expr="o_totalprice")} AS revenue
 FROM orders JOIN customer ON o_custkey = c_custkey
 WHERE o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
 GROUP BY c_mktsegment, year(o_orderdate)
@@ -712,7 +706,7 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
         |> JOIN customer ON o_custkey = c_custkey
         |> EXTEND year(o_orderdate) AS o_year
         |> AGGREGATE CAST(COUNT(*) AS BIGINT) AS n_orders,
-             {_PIPE_MSUM_SPARK} AS revenue
+             {MSUM_SQL.format(expr="o_totalprice")} AS revenue
            GROUP BY c_mktsegment, o_year
         |> WHERE n_orders > 10
         |> SELECT c_mktsegment, o_year, n_orders, revenue
@@ -722,9 +716,9 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PARAM_SQL_ORACLE = """
+PARAM_SQL_ORACLE = f"""
 SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-  (CAST(SUM(CAST(floor(o_totalprice * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6) AS revenue
+  {MSUM_SQL.format(expr="o_totalprice")} AS revenue
 FROM orders WHERE o_totalprice > 300000.0
 GROUP BY o_orderpriority
 """
@@ -742,9 +736,9 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir, "orders")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-          (CAST(SUM(CAST(floor(o_totalprice * 1e6 + 0.5) AS DECIMAL(38,0))) AS DOUBLE) / 1e6) AS revenue
+          {MSUM_SQL.format(expr="o_totalprice")} AS revenue
         FROM IDENTIFIER(:tbl) WHERE o_totalprice > :cutoff
         GROUP BY o_orderpriority
         """,

@@ -10,13 +10,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from ..functions.money import dsum
+from ..functions.money import MSUM_SQL, msum
 from ..io import load_table, register_views
 from ..registry import query
 
-Q3_ORACLE = """
+Q3_ORACLE = f"""
 SELECT l.l_orderkey,
-  CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
+  {MSUM_SQL.format(expr="l.l_extendedprice * (1 - l.l_discount)")} AS revenue,
   o.o_orderdate, o.o_orderpriority
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
@@ -48,15 +48,15 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
         .orderBy(F.col("revenue").desc(), "o_orderdate", "l_orderkey")
         .limit(10)
     )
 
 
-Q17_ORACLE = """
-SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) / 7.0 AS avg_yearly
+Q17_ORACLE = f"""
+SELECT {MSUM_SQL.format(expr="l.l_extendedprice")} / 7.0 AS avg_yearly
 FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
 WHERE p.p_brand = 'Brand#3'
   AND l.l_quantity < (
@@ -73,8 +73,8 @@ def tpch_q17_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate + join; the naive reading would rescan lineitem per row."""
     register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(
-        """
-        SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) / 7.0 AS avg_yearly
+        f"""
+        SELECT {MSUM_SQL.format(expr="l.l_extendedprice")} / 7.0 AS avg_yearly
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         WHERE p.p_brand = 'Brand#3'
           AND l.l_quantity < (
@@ -131,8 +131,8 @@ def tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q6_ORACLE = """
-SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(28,6))) AS DOUBLE) AS revenue
+Q6_ORACLE = f"""
+SELECT {MSUM_SQL.format(expr="l_extendedprice * l_discount")} AS revenue
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
   AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
@@ -151,7 +151,7 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("l_discount").between(0.05, 0.07)
             & (F.col("l_quantity") < 24)
         )
-        .agg(dsum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"))
+        .agg(msum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"))
     )
 
 
@@ -184,9 +184,9 @@ def tpch_q12_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q14_ORACLE = """
-SELECT 100.0 * CAST(SUM(CAST(CASE WHEN p.p_type = 'PROMO' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END AS DECIMAL(28,6))) AS DOUBLE)
-             / CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS promo_revenue_pct
+Q14_ORACLE = f"""
+SELECT 100.0 * {MSUM_SQL.format(expr="CASE WHEN p.p_type = 'PROMO' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END")}
+             / {MSUM_SQL.format(expr="l.l_extendedprice * (1 - l.l_discount)")} AS promo_revenue_pct
 FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
 WHERE l.l_shipdate >= TIMESTAMP '1996-03-01' AND l.l_shipdate < TIMESTAMP '1996-04-01'
 """
@@ -207,8 +207,8 @@ def tpch_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (
                 100.0
-                * dsum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0.0))
-                / dsum(rev)
+                * msum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0.0))
+                / msum(rev)
             ).alias("promo_revenue_pct")
         )
     )
@@ -241,11 +241,11 @@ def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q22_ORACLE = """
+Q22_ORACLE = f"""
 WITH avg_bal AS (
   SELECT AVG(c_acctbal) AS a FROM customer WHERE c_acctbal > 0
 )
-SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS numcust, CAST(SUM(CAST(c_acctbal AS DECIMAL(28,6))) AS DOUBLE) AS totacctbal
+SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS numcust, {MSUM_SQL.format(expr="c_acctbal")} AS totacctbal
 FROM customer c, avg_bal
 WHERE c.c_acctbal > avg_bal.a
   AND NOT EXISTS (SELECT 1 FROM orders o
@@ -262,8 +262,8 @@ def tpch_q22_global_sales_opp(spark: SparkSession, sf_dir: str) -> DataFrame:
     which would make the check vacuous)."""
     register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(
-        """
-        SELECT c_nationkey, COUNT(*) AS numcust, CAST(SUM(CAST(c_acctbal AS DECIMAL(28,6))) AS DOUBLE) AS totacctbal
+        f"""
+        SELECT c_nationkey, COUNT(*) AS numcust, {MSUM_SQL.format(expr="c_acctbal")} AS totacctbal
         FROM customer c
         WHERE c.c_acctbal > (SELECT AVG(c_acctbal) FROM customer WHERE c_acctbal > 0)
           AND NOT EXISTS (SELECT 1 FROM orders o
@@ -274,8 +274,8 @@ def tpch_q22_global_sales_opp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q7_ORACLE = """
-SELECT supp_nation, cust_nation, l_year, CAST(SUM(CAST(volume AS DECIMAL(28,6))) AS DOUBLE) AS revenue
+Q7_ORACLE = f"""
+SELECT supp_nation, cust_nation, l_year, {MSUM_SQL.format(expr="volume")} AS revenue
 FROM (
   SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
     CAST(year(l.l_shipdate) AS INTEGER) AS l_year,
@@ -317,7 +317,7 @@ def tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
         .filter(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
     )
 
 
@@ -347,9 +347,9 @@ def tpch_q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
 
 
-Q15_ORACLE = """
+Q15_ORACLE = f"""
 WITH rev AS (
-  SELECT l_suppkey, CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS total_revenue
+  SELECT l_suppkey, {MSUM_SQL.format(expr="l_extendedprice * (1 - l_discount)")} AS total_revenue
   FROM lineitem
   WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
   GROUP BY l_suppkey
@@ -370,9 +370,9 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tpch_q11_important_parts demonstrates via exchange reuse."""
     register_views(spark, sf_dir, "lineitem", "supplier")
     return spark.sql(
-        """
+        f"""
         WITH rev AS (
-          SELECT l_suppkey, CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS total_revenue
+          SELECT l_suppkey, {MSUM_SQL.format(expr="l_extendedprice * (1 - l_discount)")} AS total_revenue
           FROM lineitem
           WHERE l_shipdate >= TIMESTAMP '1996-01-01'
             AND l_shipdate < TIMESTAMP '1996-04-01'
@@ -449,8 +449,8 @@ def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q19_ORACLE = """
-SELECT CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue
+Q19_ORACLE = f"""
+SELECT {MSUM_SQL.format(expr="l.l_extendedprice * (1 - l.l_discount)")} AS revenue
 FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
 WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
        AND l.l_quantity BETWEEN 1 AND 20)
@@ -482,17 +482,17 @@ def tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(p, li["l_partkey"] == p["p_partkey"])
         .filter(bracket)
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
     )
 
 
-Q11_ORACLE = """
+Q11_ORACLE = f"""
 WITH val AS (
-  SELECT l_partkey, CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS part_value
+  SELECT l_partkey, {MSUM_SQL.format(expr="l_extendedprice * (1 - l_discount)")} AS part_value
   FROM lineitem GROUP BY l_partkey
 )
 SELECT l_partkey, part_value FROM val
-WHERE part_value > (SELECT CAST(SUM(CAST(part_value AS DECIMAL(28,6))) AS DOUBLE) * 1.5 / COUNT(*) FROM val)
+WHERE part_value > (SELECT {MSUM_SQL.format(expr="part_value")} * 1.5 / COUNT(*) FROM val)
 """
 
 
@@ -512,16 +512,16 @@ def tpch_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuous-pass guard in the r11 sf0.1 sweep. The mean-based form is
     non-empty at every fixture SF (2/29/252 rows at sf0.001/0.01/0.1)
     and stays selective as data grows. The global sum feeding the
-    threshold goes through dsum on BOTH engines so the cutoff is
+    threshold goes through msum on BOTH engines so the cutoff is
     bit-identical regardless of partitioning (a plain double SUM of
     20k part values drifts ~1e-10 with tree shape — enough to flip a
     boundary part)."""
     li = load_table(spark, sf_dir, "lineitem")
     val = li.groupBy("l_partkey").agg(
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("part_value")
+        msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("part_value")
     )
     thr = val.agg(
-        (dsum(F.col("part_value")) * F.lit(1.5) / F.count(F.lit(1))).alias("__thr")
+        (msum(F.col("part_value")) * F.lit(1.5) / F.count(F.lit(1))).alias("__thr")
     )
     return (
         val.join(broadcast(thr))
@@ -613,9 +613,9 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(Q2_ORACLE)
 
 
-Q5_ORACLE = """
+Q5_ORACLE = f"""
 SELECT n.n_name,
-  CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue
+  {MSUM_SQL.format(expr="l.l_extendedprice * (1 - l.l_discount)")} AS revenue
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
 JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -656,11 +656,11 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
         .join(broadcast(n), s["s_nationkey"] == n["n_nationkey"])
         .join(broadcast(r), n["n_regionkey"] == r["r_regionkey"])
         .groupBy("n_name")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
     )
 
 
-Q8_ORACLE = """
+Q8_ORACLE = f"""
 WITH all_sales AS (
   SELECT CAST(year(o.o_orderdate) AS INTEGER) AS o_year,
     l.l_extendedprice * (1 - l.l_discount) AS volume,
@@ -679,8 +679,8 @@ WITH all_sales AS (
 )
 SELECT o_year,
   floor(
-    CAST(SUM(CAST(CASE WHEN supp_nation = 'NATION_3' THEN volume ELSE 0 END AS DECIMAL(28,6))) AS DOUBLE)
-    / CAST(SUM(CAST(volume AS DECIMAL(28,6))) AS DOUBLE) * 1e6
+    {MSUM_SQL.format(expr="CASE WHEN supp_nation = 'NATION_3' THEN volume ELSE 0 END")}
+    / {MSUM_SQL.format(expr="volume")} * 1e6
   ) / 1e6 AS mkt_share
 FROM all_sales
 GROUP BY o_year
@@ -720,8 +720,8 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (
                 F.floor(
-                    dsum(F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(0.0))
-                    / dsum(vol)
+                    msum(F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(0.0))
+                    / msum(vol)
                     * 1e6
                 )
                 / 1e6
@@ -733,9 +733,7 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q9_ORACLE = f"""
 WITH ps AS ({PS_SQL})
 SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS INTEGER) AS o_year,
-  CAST(SUM(CAST(
-    floor((l.l_extendedprice * (1 - l.l_discount) - ps.ps_supplycost * l.l_quantity) * 1e6) / 1e6
-  AS DECIMAL(28,6))) AS DOUBLE) AS sum_profit
+  {MSUM_SQL.format(expr="floor((l.l_extendedprice * (1 - l.l_discount) - ps.ps_supplycost * l.l_quantity) * 1e6) / 1e6")} AS sum_profit
 FROM lineitem l
 JOIN ps ON ps.ps_partkey = l.l_partkey AND ps.ps_suppkey = l.l_suppkey
 JOIN part p ON p.p_partkey = l.l_partkey
@@ -754,11 +752,12 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier nation per year for one part family. The ps frame scales
     with data (never broadcast; equi-join shuffles co-partition it with
     lineitem); per-row profit is pure double arithmetic (cross-engine
-    exact), accumulation is decimal. The profit expression is
-    floor-scaled to 6 dp BEFORE the decimal cast: supplycost*qty
-    reconstructs near-price values, so profit lands on .5e-6
-    boundaries where the cast's half-up (Spark) vs half-even (DuckDB)
-    disagree — floor of a cross-engine-identical double is safe."""
+    exact), accumulation is ``msum``. The profit expression is
+    truncated to 6 dp per row (``floor(x*1e6)/1e6``) before ``msum``:
+    supplycost*qty reconstructs near-price values that land on .5e-6
+    boundaries, and the truncation is part of the query's definition —
+    dropping it would let msum's round-half-up step move sum_profit
+    off the values every earlier external check recorded."""
     li = load_table(spark, sf_dir, "lineitem")
     ps = (
         li.groupBy(
@@ -794,13 +793,13 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("int").alias("o_year"),
         )
-        .agg(dsum(profit).alias("sum_profit"))
+        .agg(msum(profit).alias("sum_profit"))
     )
 
 
-Q10_ORACLE = """
+Q10_ORACLE = f"""
 SELECT c.c_custkey, c.c_name,
-  CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
+  {MSUM_SQL.format(expr="l.l_extendedprice * (1 - l.l_discount)")} AS revenue,
   c.c_acctbal, n.n_name
 FROM customer c
 JOIN orders o ON c.c_custkey = o.o_custkey
@@ -831,7 +830,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, o["o_custkey"] == c["c_custkey"])
         .join(broadcast(n), c["c_nationkey"] == n["n_nationkey"])
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.col("revenue").desc(), "c_custkey")
         .limit(20)

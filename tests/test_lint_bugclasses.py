@@ -1,5 +1,5 @@
-"""Source-level lints for the two round-6 audited bug classes, so new
-code can't silently reintroduce them (VERDICT r6 item 6):
+"""Source-level lints for audited bug classes, so new code can't
+silently reintroduce them (VERDICT r6 item 6):
 
 1. Data-scaled int64 products — two BIGINTs that each scale with data
    volume multiplied in int64 (count*sum variance numerators, cnt*cnt,
@@ -12,7 +12,12 @@ code can't silently reintroduce them (VERDICT r6 item 6):
    cells); any oracled cosine must materialize norms and divide the
    raw dot (CLAUDE.md, cluster_medoids r6 / knn_bruteforce r7).
 
-Both lints run over the query/operator sources as text; known-safe
+3. A second money-sum path — a per-row cast to a fixed-scale decimal
+   splits on .5e-6 boundaries (Spark rounds the printed digits, DuckDB
+   the binary value; tpch_q9). Money sums go through
+   ``functions.money.msum`` / ``MSUM_SQL`` only.
+
+The lints run over the query/operator sources as text; known-safe
 sites are allowlisted by (path suffix, line-content marker) so a line
 move doesn't break the pin but a NEW occurrence fails loudly.
 """
@@ -112,3 +117,20 @@ def test_operator_prenormalized_dot_sites_are_frozen():
 )
 def test_lint_catches_seeded_regressions(bad):
     assert _INT64_PRODUCT.search(bad) and not _WIDE.search(bad)
+
+
+# the retired decimal-cast money sum: its helper name and its scale
+_SECOND_MONEY_PATH = re.compile(r"\bdsum\(|DECIMAL\(28,6\)|decimal\(28,6\)")
+
+
+def test_one_money_sum_path():
+    hits = [
+        (str(p.relative_to(PKG)), i, line.strip())
+        for p in sorted(PKG.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if _SECOND_MONEY_PATH.search(line)
+    ]
+    assert not hits, (
+        "second money-sum path — use functions.money.msum on Spark and "
+        f"MSUM_SQL in SQL, on BOTH engines (CLAUDE.md rule): {hits}"
+    )

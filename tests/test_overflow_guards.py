@@ -151,3 +151,56 @@ def test_cms_dot_decimal_accumulation_past_int64(spark):
         F.sum(F.col("cnt").cast("decimal(38,0)") * F.col("cnt_b")).alias("dot")
     ).collect()[0]
     assert int(out["dot"]) == 4 * 10**9 * 5 * 10**9 + 3 * 10**9 * 6 * 10**9
+
+
+def test_msum_matches_oracle_on_boundaries_and_past_int64(spark):
+    """``msum`` vs its SQL twin ``MSUM_SQL`` on DuckDB and Spark SQL,
+    over values the fixtures never reach: money on or next to a .5e-6
+    boundary (odd multiples of 1/128 sit exactly on it; literals like
+    1.0079195 print as on it but are a hair off in binary, where a
+    decimal cast rounds the printed digits on Spark and the binary
+    value on DuckDB), q9-style ``price / qty * qty`` reconstructions
+    of them, and one group whose total passes 2^63 micro-units
+    (~9.2e12 money units, where a long accumulator overflows under
+    ANSI). All three must equal the exact integer sum at shuffle
+    widths 2/32/200."""
+    import math
+
+    import duckdb
+
+    from glue_etl_pyspark_spark.functions.money import MSUM_SQL, msum
+
+    edge = [(2 * i + 1) / 128 for i in range(60)]
+    edge += [float(f"{i}.{7919 * i % 10**6:06d}5") for i in range(60)]
+    rows = [("edge", v * q, float(q)) for v in edge for q in (1, 3, 7)]
+    rows += [("big", 3.0e12 + i / 128, 1.0) for i in range(4)]
+    expr = "price / qty * qty"
+    sql = f"SELECT g, {MSUM_SQL.format(expr=expr)} AS s FROM msum_edge GROUP BY g"
+    vals = {g: [] for g, _, _ in rows}
+    for g, price, qty in rows:
+        vals[g].append(price / qty * qty)
+    assert any((v * 1e6) % 1 == 0.5 for v in vals["edge"])
+    micro = {g: sum(math.floor(v * 1e6 + 0.5) for v in vs) for g, vs in vals.items()}
+    assert micro["big"] > 2**63
+    want = {g: m / 1e6 for g, m in micro.items()}
+
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE msum_edge (g VARCHAR, price DOUBLE, qty DOUBLE)")
+        con.executemany("INSERT INTO msum_edge VALUES (?, ?, ?)", rows)
+        duck = dict(con.execute(sql).fetchall())
+    assert duck == want
+
+    df = spark.createDataFrame(rows, "g string, price double, qty double")
+    orig = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in (2, 32, 200):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            wide = df.repartition(parts)
+            got = wide.groupBy("g").agg(msum(F.expr(expr)).alias("s")).collect()
+            assert {r["g"]: r["s"] for r in got} == want, parts
+            wide.createOrReplaceTempView("msum_edge")
+            got = spark.sql(sql).collect()
+            assert {r["g"]: r["s"] for r in got} == want, parts
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", orig)
+        spark.catalog.dropTempView("msum_edge")

@@ -8,18 +8,23 @@ Two invariants the driver depends on:
    func_map_ops). Arrays/maps must be serialized (array_join/to_json)
    at the query boundary.
 
-2. ``load_all()`` emits queries in DRIVER_PRIORITY order: the driver
-   checks a bounded prefix (50 names in round 1) in dict-insertion
-   order, so the prefix must contain the queries that still need an
-   external correctness row, and oracle-less rows-only queries must
-   come last.
+2. ``load_all()`` emits queries in the order computed from the
+   ``CORRECTNESS_r*.json`` evidence: the driver checks the first 50
+   names in dict-insertion order, so that prefix must hold the queries
+   that most need an external correctness row.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from glue_etl_pyspark_spark.registry import DRIVER_PRIORITY, load_all
+from glue_etl_pyspark_spark.registry import (
+    DRIVER_REWORKED,
+    QuerySpec,
+    driver_order,
+    last_checked_rounds,
+    load_all,
+)
 
 # Queries whose bodies are driven by sinks/streams and are exercised by
 # dedicated tests; building them here would redundantly re-run writes.
@@ -47,96 +52,38 @@ def test_oracled_outputs_are_atomic(spark, smoke_dir, name):
     )
 
 
-def test_registry_order_is_priority_prefix():
+def test_driver_window_follows_evidence():
+    """The first 50 names: never-checked names lead, every live
+    rework (newest row not after its DRIVER_REWORKED round) is inside,
+    and no other name inside was checked more recently than any name
+    outside."""
+    last_checked = last_checked_rounds()
     names = list(load_all())
-    present_prio = [n for n in DRIVER_PRIORITY if n in set(names)]
-    assert names[: len(present_prio)] == present_prio
-
-    # every oracle-less (rows-only) query sorts after every oracled one,
-    # outside the explicit priority block
-    tail = names[len(present_prio) :]
-    specs = load_all()
-    seen_rows_only = False
-    for n in tail:
-        if specs[n].oracle is None:
-            seen_rows_only = True
-        else:
-            assert not seen_rows_only, f"oracled {n} after rows-only query"
-
-
-def test_driver_window_is_exactly_driver_width():
-    """The driver checks the first 50 names (confirmed r1-r8). The r8
-    cutoff marker drifted to position 61, silently pushing 11 names
-    outside the checked window — pin the width structurally so a
-    comment can never lie about it again (ADVICE r8)."""
-    from glue_etl_pyspark_spark.registry import DRIVER_WINDOW
-
-    assert len(DRIVER_WINDOW) == 50
-    assert len(set(DRIVER_WINDOW)) == 50, "duplicate window names"
-
-
-def test_priority_window_targets_external_coverage_gaps():
-    """Round-9 rotation: every name has external evidence, so the
-    window holds the globally stalest names — never-checked names (if
-    any appear mid-round) must lead, and no name OUTSIDE the window may
-    be staler than a name inside it, except the documented
-    DRIVER_DEFERRED rows-only block (same round as the window's tail;
-    displaced by the 50-slot width). Globs CORRECTNESS_r*.json so the
-    computation tracks whatever rounds exist."""
-    import json
-    import pathlib
-    import re
-
-    from glue_etl_pyspark_spark.registry import (
-        DRIVER_DEFERRED,
-        DRIVER_REWORKED,
-    )
-
-    root = pathlib.Path(__file__).resolve().parents[1]
-    last_checked: dict[str, int] = {}
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        r = int(re.search(r"r(\d+)", path.name).group(1))
-        for n in json.loads(path.read_text()):
-            last_checked[n] = max(last_checked.get(n, 0), r)
-    latest_round = max(last_checked.values())
-    all_names = list(load_all())
-    window = all_names[:50]
-    never = [n for n in window if n not in last_checked]
-    assert window[: len(never)] == never, "never-checked names must lead"
-    # a reworked query (code/plan changed after its last external row)
-    # outranks any merely-stale name: its evidence predates its
-    # implementation. All of them must sit INSIDE the window.
-    missing_rework = [n for n in DRIVER_REWORKED if n not in window]
-    assert not missing_rework, (
-        f"reworked queries left with pre-rework external rows: {missing_rework}"
-    )
-    # staleness outside the window, ignoring the documented deferral
-    outside = [
-        n
-        for n in all_names[50:]
-        if n in last_checked and n not in DRIVER_DEFERRED
-    ]
-    floor_outside = min(
-        (last_checked[n] for n in outside), default=latest_round
-    )
-    deferred_rounds = {
-        last_checked[n] for n in DRIVER_DEFERRED if n in last_checked
-    }
-    # once the driver records this window the checked names' age becomes
-    # the NEW latest round, so freshly-checked slots are exempt
-    wasted = [
-        n
-        for n in window
-        if n not in DRIVER_REWORKED
-        and floor_outside <= last_checked.get(n, 0) < latest_round
-    ]
-    assert not wasted, f"window wastes slots on fresher-evidence {wasted}"
-    # the deferral must never hide anything staler than the window tail
-    window_max = max(
-        (last_checked[n] for n in window if n in last_checked),
+    window, outside = names[:50], names[50:]
+    never = [n for n in names if n not in last_checked]
+    assert window[: len(never)] == never[:50], "never-checked names must lead"
+    live = [n for n, r in DRIVER_REWORKED.items() if last_checked.get(n, 0) <= r]
+    assert set(live) <= set(window), f"live reworks outside the window: {live}"
+    newest_inside = max(
+        (last_checked[n] for n in window if n in last_checked and n not in live),
         default=0,
     )
-    assert all(
-        r >= window_max or window_max == latest_round
-        for r in deferred_rounds
-    ), "DRIVER_DEFERRED hides names staler than the window tail"
+    fresher = [n for n in outside if last_checked.get(n, 0) < newest_inside]
+    assert not fresher, f"outside the window yet staler than round {newest_inside}: {fresher}"
+
+
+def test_driver_order_ranks_evidence(monkeypatch):
+    """The ordering helper on synthetic specs: without evidence it is
+    oracled-first registration order; a rework leads only until a row
+    newer than its round exists."""
+    specs = {
+        n: QuerySpec(n, lambda spark, sf_dir: None, oracle, "test")
+        for n, oracle in (("a", None), ("b", "SELECT 1"), ("c", None), ("d", "SELECT 1"))
+    }
+    assert driver_order(specs, {}) == ["b", "d", "a", "c"]
+    seen = {"a": 3, "b": 5, "c": 3, "d": 4}
+    assert driver_order(specs, seen) == ["a", "c", "d", "b"]
+    monkeypatch.setitem(DRIVER_REWORKED, "b", 5)
+    assert driver_order(specs, seen) == ["b", "a", "c", "d"]
+    assert driver_order(specs, {**seen, "b": 6}) == ["a", "c", "d", "b"]
+    assert driver_order(specs, {"a": 1, "b": 6, "c": 1}) == ["d", "a", "c", "b"]
