@@ -10,8 +10,11 @@ code ever sees them:
   exact DuckDB parity (integer ``div 1000`` — double division loses
   sub-microsecond precision at this magnitude; SURVEY.md §8.1).
 
-Scale notes: loaders return plain lazy DataFrames — no caching, no
-collect. Filter/column pruning on top of these reaches the parquet
+Scale notes: loaders return plain lazy DataFrames — no data caching,
+no collect. What is cached is metadata only: each table file's parquet
+schema is inferred once per process (``parquet_schema``), because a
+bare ``spark.read.parquet`` launches a footer-reading Spark job on
+every call. Filter/column pruning on top of these reaches the parquet
 scan (verified via plans.assert_pushed_filters). At 100 TB the same
 code reads a partitioned table dir; partition pruning is automatic
 for filters on partition columns.
@@ -19,8 +22,11 @@ for filters on partition columns.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .session import ensure_session_configs
 
@@ -43,12 +49,37 @@ TABLE_NAMES = (
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "customer", "part"})
 
 
+# Inferred schemas keyed by the resolved path's stat identity, so a file
+# rewritten at the same path (new inode, size or mtime) is re-inferred.
+# A directory source is identified by the directory's own stat, which
+# changes when its entries do (Spark's overwrite replaces them).
+_SCHEMAS: dict[tuple[str, int, int, int], StructType] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    file version. Inference reads parquet footers in a Spark job;
+    reading with this schema given launches none. A path ``os.stat``
+    cannot see (``s3://``, ``hdfs://``) is inferred on every call."""
+    try:
+        real = os.path.realpath(path)
+        st = os.stat(real)
+    except OSError:
+        return spark.read.parquet(path).schema
+    key = (real, st.st_ino, st.st_size, st.st_mtime_ns)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver table as a DataFrame with canonical types."""
     if name not in TABLE_NAMES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     ensure_session_configs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = _fix_events_ts(df)
     return df

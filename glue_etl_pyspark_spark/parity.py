@@ -98,58 +98,6 @@ def _normalize(rows: list[tuple], colnames: list[str]) -> list[tuple]:
     return out
 
 
-def compare_pandas(spark_df, duck_res) -> str:
-    """Order-insensitive, DTYPE-STRICT frame compare for driver sims
-    and probe scripts: both sides rendered via pandas + astype(str),
-    never fetchall (the r4 HUGEINT rule — the driver hashes
-    pandas-rendered values, so an un-CAST DuckDB SUM landing as
-    float64 renders '0.0' against Spark's int64 '0': a real driver
-    mismatch that fetchall()'s python ints can NEVER show). Floats
-    are rounded 6dp before rendering, matching _normalize."""
-    sp = spark_df.toPandas()
-    op = duck_res.df()
-    if sorted(sp.columns) != sorted(op.columns):
-        return f"SCHEMA DIFF {sorted(sp.columns)} vs {sorted(op.columns)}"
-    if len(sp) != len(op):
-        return f"ROWS DIFF {len(sp)} vs {len(op)}"
-    if len(sp) == 0:
-        return "VACUOUS (0 rows both sides)"
-
-    def canon(df):
-        df = df[sorted(df.columns)].copy()
-        for c in df.columns:
-            if getattr(df[c].dtype, "kind", "") == "f":
-                # + 0.0 normalizes signed zero: round(6) keeps -0.0,
-                # which astype(str) renders '-0.0' vs '0.0' (ADVICE r15)
-                df[c] = df[c].round(6) + 0.0
-        return sorted(map(tuple, df.astype(str).values.tolist()))
-
-    sn, on = canon(sp), canon(op)
-    if sn != on:
-        d = [f"{a} vs {b}" for a, b in zip(sn, on) if a != b][:3]
-        return "VALUE DIFF " + "; ".join(d)
-    return "MATCH"
-
-
-def int_frame(duck_res_df, what: str) -> list[tuple]:
-    """Pandas-dtype-vetted integer rows for probe constructions that
-    sum/re-rank oracle values in Python: every column must land as an
-    integer kind in pandas (the same gate _numeric_kind_mismatches
-    applies via DESCRIBE) — a HUGEINT/DECIMAL column silently becomes
-    float64 and would poison exact-tuple comparisons."""
-    bad = [
-        c for c in duck_res_df.columns
-        if getattr(duck_res_df[c].dtype, "kind", "") not in "iu"
-    ]
-    if bad:
-        raise AssertionError(
-            f"{what}: oracle columns {bad} are not integer-kind in pandas "
-            "(HUGEINT/DECIMAL render float64 in the driver hash) — CAST "
-            "them to BIGINT in the oracle"
-        )
-    return [tuple(int(x) for x in r) for r in duck_res_df.values.tolist()]
-
-
 @dataclass
 class ParityResult:
     name: str

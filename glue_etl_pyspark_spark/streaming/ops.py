@@ -21,26 +21,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import parquet_schema
 from ..session import ensure_session_configs
 
 _MEM_COUNTER = itertools.count()
-
-# Parquet schemas by path — METADATA memoization only (footer read is a
-# driver-side file-index + footer parse costing ~0.2 s per call, paid
-# inside every timed streaming run). Values are never cached: the
-# stream still reads every data row from the parquet source each
-# drain. Safe because the driver fixtures are immutable within a
-# process lifetime; a changed file needs a new path or process (same
-# stance as Spark's own session-scoped InMemoryFileIndex cache).
-_SCHEMA_CACHE: dict[str, object] = {}
-
-
-def _parquet_schema(spark: SparkSession, path: str):
-    sch = _SCHEMA_CACHE.get(path)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[path] = sch
-    return sch
 
 
 def _default_state_partitions() -> int:
@@ -133,7 +117,7 @@ def events_stream(
     staging from ``stage_events_with_sentinel``)."""
     ensure_session_configs(spark)
     # schema from the batch reader (footer), including the raw ts long
-    raw_schema = _parquet_schema(spark, f"{sf_dir}/events.parquet")
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = spark.readStream.schema(raw_schema).parquet(
         staged_dir or stage_stream_dir(sf_dir)
     )

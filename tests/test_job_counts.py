@@ -7,6 +7,11 @@ moves these counts before it shows in wall time. A count covers the
 whole query: its registry ``fn`` plus a noop write, in one job group.
 The pins are per fixture and were measured before the change that
 added them; a deliberate change to either loop re-measures them.
+
+Schema inference is not counted: ``io.load_table`` infers each table's
+schema once per process, so ``count_jobs`` loads every table of the
+fixture before it counts. A count is then the same whichever tests ran
+before it.
 """
 
 from __future__ import annotations
@@ -16,25 +21,36 @@ import uuid
 
 import pytest
 
+from glue_etl_pyspark_spark.io import load_tables
 from glue_etl_pyspark_spark.registry import load_all
 
 JOBS = {
-    "sf0.01": {"text_repeated_substrings": 67, "graph_connected_components": 61},
-    "sf0.1": {"text_repeated_substrings": 67, "graph_connected_components": 85},
+    "sf0.01": {"text_repeated_substrings": 66, "graph_connected_components": 60},
+    "sf0.1": {"text_repeated_substrings": 66, "graph_connected_components": 84},
 }
 
 
-def count_jobs(spark, name: str, sf_dir: str) -> int:
+def jobs_launched(spark, fn, what: str = "job count") -> int:
+    """Spark jobs launched by ``fn()``, counted by a fresh job group."""
     sc = spark.sparkContext
     group = f"job-count-{uuid.uuid4().hex}"
-    spark.catalog.clearCache()
-    sc.setJobGroup(group, name)
+    sc.setJobGroup(group, what)
     try:
-        load_all()[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def count_jobs(spark, name: str, sf_dir: str) -> int:
+    load_tables(spark, sf_dir)
+    spark.catalog.clearCache()
+    return jobs_launched(
+        spark,
+        lambda: load_all()[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save(),
+        name,
+    )
 
 
 @pytest.mark.parametrize("name", ["text_repeated_substrings", "graph_connected_components"])

@@ -17,6 +17,11 @@ silently reintroduce them (VERDICT r6 item 6):
    the binary value; tpch_q9). Money sums go through
    ``functions.money.msum`` / ``MSUM_SQL`` only.
 
+4. A fixture table read bare — ``spark.read.parquet(f"{sf_dir}/...")``
+   outside ``io.py`` skips ``load_table``: its memoized schema (a bare
+   read launches a schema-inference Spark job per call) and the
+   events ``ts`` conversion.
+
 The lints run over the query/operator sources as text; known-safe
 sites are allowlisted by (path suffix, line-content marker) so a line
 move doesn't break the pin but a NEW occurrence fails loudly.
@@ -134,3 +139,38 @@ def test_one_money_sum_path():
         "second money-sum path — use functions.money.msum on Spark and "
         f"MSUM_SQL in SQL, on BOTH engines (CLAUDE.md rule): {hits}"
     )
+
+
+# a parquet read (or write) whose path is built from the fixture dir
+_BARE_FIXTURE_READ = re.compile(
+    r"\.parquet\(\s*(f[\"'][^\"']*\{sf_dir\}|os\.path\.join\(\s*sf_dir\b)"
+)
+
+
+def test_fixture_tables_read_through_load_table():
+    files = [p for p in sorted(PKG.rglob("*.py")) if p != PKG / "io.py"]
+    files += sorted((PKG.parent / "scripts").glob("*.py"))
+    hits = [
+        (str(p.relative_to(PKG.parent)), i, line.strip())
+        for p in files
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if _BARE_FIXTURE_READ.search(line)
+    ]
+    assert not hits, (
+        "fixture table read bare — use io.load_table, which memoizes the "
+        f"schema and converts events.ts (CLAUDE.md rule): {hits}"
+    )
+
+
+@pytest.mark.parametrize(
+    "line, bad",
+    [
+        ('spark.read.parquet(f"{sf_dir}/orders.parquet")', True),
+        ("spark.read.option('mergeSchema', 'true').parquet(f'{sf_dir}/x.parquet')", True),
+        ('spark.read.parquet(os.path.join(sf_dir, "events.parquet"))', True),
+        ("spark.read.parquet(path)", False),
+        ('spark.read.parquet(f"{out_dir}/part")', False),
+    ],
+)
+def test_bare_fixture_read_lint(line, bad):
+    assert bool(_BARE_FIXTURE_READ.search(line)) is bad
