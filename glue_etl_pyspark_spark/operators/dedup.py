@@ -1,6 +1,7 @@
 """Deduplication operators for LLM-training-data pipelines
 (SURVEY.md §2.12): exact, MinHash-LSH, SimHash banding, exact n-gram
-Jaccard.
+Jaccard. Clustering the mined pairs (connected components) is
+``operators.components.cc_labels``.
 
 100 TB design rules applied throughout: dedup keys are fixed-width
 hashes (shuffle the 64-char digest, never the document body); all
@@ -507,107 +508,3 @@ def minhash_lsh_pairs(
         return out.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     finally:
         feats.unpersist()
-
-
-def dedup_clusters(
-    pairs: DataFrame,
-    max_iterations: int = 20,
-    strict: bool = False,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Connected components over near-dup pairs (SURVEY.md §2.12):
-    every doc in a component gets the component's smallest id as its
-    cluster label — the keep-one-per-cluster step after any near-dup
-    pair mining.
-
-    Iterative smallest-label propagation: each round joins every
-    node's current label against its neighbors' labels and keeps the
-    minimum; stops early when a round changes nothing. Rounds needed =
-    graph diameter (near-dup clusters are shallow — pairs chain only
-    through mutual similarity), each round is two shuffles on id.
-    GraphFrames would do the same with better constants; this stays
-    dependency-free. Emits (id, cluster_id).
-
-    Iterative-algorithm lineage rule: each round's result is
-    ``localCheckpoint``-ed (and the previous round unpersisted), so the
-    plan stays one-round deep — without truncation, round N's
-    convergence count re-executes all N-1 prior rounds from scratch
-    (quadratic recompute) and the analyzer re-plans an ever-deeper
-    graph. ``edges`` is persisted for its 2-joins-per-round reuse.
-
-    Reliability tradeoff: ``localCheckpoint`` (the default) writes to
-    executor-local block storage, which is NOT fault-tolerant — losing
-    an executor mid-run loses blocks that truncation removed the
-    lineage to recompute, killing the whole iteration. Acceptable for
-    bounded replays/tests; for long-running or 100 TB-scale runs pass
-    ``checkpoint_dir`` (an HDFS/S3 path) and each round is reliably
-    checkpointed there instead, so executor loss costs one round's
-    recompute, not the job.
-
-    If the graph hasn't converged after ``max_iterations``, raises
-    (``strict=True``) or warns and returns the partial labels —
-    callers must not mistake a truncated propagation for final
-    components.
-    """
-    import warnings
-
-    if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=False)
-        return df.localCheckpoint(eager=False)
-
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-        .persist()
-    )
-    labels = _truncate(
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("id"))
-    )
-    converged = False
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        # truncate lineage: this round's plan must not contain the
-        # previous rounds' joins
-        updated = _truncate(
-            labels.join(neighbor_min, labels["id"] == neighbor_min["src"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-        )
-        # convergence check: one count per round, driver-side scalar only
-        changed = (
-            updated.alias("u")
-            .join(labels.alias("l"), "id")
-            .filter(F.col("u.cluster_id") != F.col("l.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels = updated
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        msg = (
-            f"dedup_clusters did not converge within {max_iterations} "
-            "iterations — labels are a partial propagation (graph "
-            "diameter exceeds max_iterations)"
-        )
-        if strict:
-            raise RuntimeError(msg)
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return labels

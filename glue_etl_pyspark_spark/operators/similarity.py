@@ -321,7 +321,7 @@ def ivf_build(
                     lambda s: s["__mean"],
                 ).alias("centroid")
             )
-            # iterative-lineage rule (same as dedup_clusters): truncate
+            # iterative-lineage rule (same as cc_labels): truncate
             # per iteration, else iteration N's broadcast re-executes
             # every prior assignment pass — quadratic recompute that the
             # 10x scale probe exposed (sf0.1 hid it). The frame is tiny

@@ -385,8 +385,8 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     program. Iteration count is log2-bounded (11 levels), so the loop
     is shallow however wide the base table is — the safe recursion
     shape at scale (per-row walks that terminate fast, not unbounded
-    graph closure; dedup_clusters covers that case with explicit
-    rounds)."""
+    graph closure; operators.components.cc_labels covers that case
+    with explicit, certified rounds)."""
     register_views(spark, sf_dir, "customer")
     return spark.sql(_RECURSIVE_SQL)
 

@@ -91,9 +91,10 @@ def doc_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard via applyInPandas. The sequential bin state is beyond plain
     window SQL, but NOT beyond a recursive CTE — the oracle walks each
     shard's documents in id order carrying (seq, fill), exactly the
-    operator's loop (dedup_clusters precedent: linear recursion makes
-    a sequential op fully hash-checkable). Also property-gated in
-    pytest (exactly-once, capacity, monotone bins)."""
+    operator's loop (the dedup_clusters_minlabel closure-oracle
+    precedent: linear recursion makes a sequential op fully
+    hash-checkable). Also property-gated in pytest (exactly-once,
+    capacity, monotone bins)."""
     d = load_table(spark, sf_dir, "documents")
     docs = d.select(
         "doc_id", F.size(tokenize_ws("text")).cast("bigint").alias("n_tokens")

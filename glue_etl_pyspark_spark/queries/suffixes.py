@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.components import cc_labels
 from ..operators.ranks import suffix_ranks
 from ..registry import query
 from .llm_text import _DUCK_TOKS
@@ -489,13 +490,12 @@ def repeat_families_frame(d: DataFrame, k: int = _FAM_K) -> DataFrame:
     the quadratic within-group pair set — same components), and the
     fixpoint iteration is the certified ``cc_labels``. Both the
     per-doc gram frame (read twice: hub agg + edge join) and the edge
-    frame (re-read every fixpoint round) are corpus-scaled reuse
-    frames — persist(DISK_ONLY) per the winnow rule, released once
-    the node-scaled labels are materialized (cc_labels checkpoints
-    per round, so the returned plan no longer references them)."""
+    frame (re-read every fixpoint round, persisted by ``cc_labels``
+    itself) are corpus-scaled reuse frames — persist(DISK_ONLY) per
+    the winnow rule, released once the node-scaled labels are
+    materialized (cc_labels checkpoints per round, so the returned
+    plan no longer references them)."""
     from pyspark import StorageLevel
-
-    from .graph import cc_labels
 
     from ..functions.text import tokenize_ws
 
@@ -525,11 +525,7 @@ def repeat_families_frame(d: DataFrame, k: int = _FAM_K) -> DataFrame:
         .select(F.col("hub").alias("u"), F.col("doc_id").alias("v"))
         .distinct()
     )
-    und = sedges.unionAll(
-        sedges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist(StorageLevel.DISK_ONLY)
-    labels = cc_labels(und)
-    und.unpersist()
+    labels = cc_labels(sedges)
     dg.unpersist()
     return (
         d.select("doc_id")

@@ -33,9 +33,9 @@ _SLOW_TESTS = {
     "test_boruvka_random_graphs",
     "test_cc_known_shapes[edges0]",
     "test_cc_known_shapes[edges4]",
+    "test_cc_labels_match_union_find",
     "test_cc_random_graphs",
     "test_closing_ops_repeated_run_determinism",
-    "test_dedup_clusters_match_union_find",
     "test_ewma_literal_recursion_matches_recursive_sql",
     "test_filter_groupby_agreement",
     "test_glue_map_and_filter",

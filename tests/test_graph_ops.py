@@ -190,12 +190,33 @@ def test_cc_known_shapes(spark, edges):
     """The certified fixpoint reaches the true component min on every
     shape — including the anti-ordered chains where the jump buys
     nothing and convergence takes O(diameter) rounds."""
-    from glue_etl_pyspark_spark.queries.graph import cc_labels
+    from glue_etl_pyspark_spark.operators.components import cc_labels
 
     df = spark.createDataFrame(sorted(edges), "u bigint, v bigint")
-    und = df.unionAll(df.selectExpr("v as u", "u as v"))
-    got = {r.node: r.label for r in cc_labels(und).collect()}
+    got = {r.node: r.label for r in cc_labels(df).collect()}
     assert got == _cc_brute(edges)
+
+
+def test_cc_valve_raises_and_lineage_truncated(spark):
+    """The max_rounds valve is loud: the 10-node anti-ordered path
+    needs more than one round, so max_rounds=1 raises instead of
+    returning a partial propagation. A converged result is a
+    checkpoint scan: its plan holds none of the rounds' joins
+    (iterative lineage growth means quadratic recompute and analyzer
+    blowup at scale). Either way the persisted edge frame is released."""
+    from glue_etl_pyspark_spark.operators.components import cc_labels
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    df = spark.createDataFrame(sorted(_CC_ANTI_PATH), "u bigint, v bigint")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        cc_labels(df, max_rounds=1)
+    assert cache.isEmpty()
+    labels = cc_labels(df)
+    assert cache.isEmpty()
+    plan = labels._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan[:2000]
+    assert {r.node: r.label for r in labels.collect()} == _cc_brute(_CC_ANTI_PATH)
 
 
 @settings(max_examples=_hyp_n(10), deadline=None,
@@ -214,11 +235,10 @@ def test_cc_known_shapes(spark, edges):
 def test_cc_random_graphs(spark, edges):
     """Certified-fixpoint labels equal driver-side BFS on arbitrary
     ≤10-node graphs, anti-ordered chains always included."""
-    from glue_etl_pyspark_spark.queries.graph import cc_labels
+    from glue_etl_pyspark_spark.operators.components import cc_labels
 
     df = spark.createDataFrame(sorted(edges), "u bigint, v bigint")
-    und = df.unionAll(df.selectExpr("v as u", "u as v"))
-    got = {r.node: r.label for r in cc_labels(und).collect()}
+    got = {r.node: r.label for r in cc_labels(df).collect()}
     assert got == _cc_brute(edges)
 
 
@@ -285,7 +305,7 @@ def test_cc_supercritical_fixpoint(spark, smoke_dir):
     from pyspark.sql import functions as F
 
     from glue_etl_pyspark_spark.io import load_table
-    from glue_etl_pyspark_spark.queries.graph import cc_labels
+    from glue_etl_pyspark_spark.operators.components import cc_labels
 
     li = load_table(spark, smoke_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
@@ -308,8 +328,7 @@ def test_cc_supercritical_fixpoint(spark, smoke_dir):
         __import__("collections").Counter(truth.values()).values()
     ) > n // 4, "fixture no longer supercritical — retune t"
     df = spark.createDataFrame(sorted(kept), "u bigint, v bigint")
-    und = df.unionAll(df.selectExpr("v as u", "u as v"))
-    got = {r.node: r.label for r in cc_labels(und).collect()}
+    got = {r.node: r.label for r in cc_labels(df).collect()}
     assert got == truth
 
 

@@ -1,12 +1,13 @@
 """Job-count pins for the iterative operators that loop on the Spark driver.
 
 Suffix ranking (prefix doubling, ``operators/ranks.py``) and connected
-components (label propagation, ``cc_labels``) run Spark jobs per loop
-round. A change that adds a round, or a separate collect per round,
+components (label propagation, ``cc_labels`` in
+``operators/components.py``, behind both graph CC and near-dup
+clustering) run Spark jobs per loop round. A change that adds a round, or a separate collect per round,
 moves these counts before it shows in wall time. A count covers the
 whole query: its registry ``fn`` plus a noop write, in one job group.
-The pins are per fixture and were measured before the change that
-added them; a deliberate change to either loop re-measures them.
+The pins are per fixture; a deliberate change to either loop
+re-measures them.
 
 Schema inference is not counted: ``io.load_table`` infers each table's
 schema once per process, so ``count_jobs`` loads every table of the
@@ -25,8 +26,16 @@ from glue_etl_pyspark_spark.io import load_tables
 from glue_etl_pyspark_spark.registry import load_all
 
 JOBS = {
-    "sf0.01": {"text_repeated_substrings": 66, "graph_connected_components": 60},
-    "sf0.1": {"text_repeated_substrings": 66, "graph_connected_components": 84},
+    "sf0.01": {
+        "text_repeated_substrings": 66,
+        "graph_connected_components": 60,
+        "dedup_clusters_minlabel": 32,
+    },
+    "sf0.1": {
+        "text_repeated_substrings": 66,
+        "graph_connected_components": 84,
+        "dedup_clusters_minlabel": 32,
+    },
 }
 
 
@@ -53,7 +62,10 @@ def count_jobs(spark, name: str, sf_dir: str) -> int:
     )
 
 
-@pytest.mark.parametrize("name", ["text_repeated_substrings", "graph_connected_components"])
+@pytest.mark.parametrize(
+    "name",
+    ["text_repeated_substrings", "graph_connected_components", "dedup_clusters_minlabel"],
+)
 def test_iterative_op_job_count(spark, sf_dir, name):
     pins = JOBS.get(os.path.basename(os.path.normpath(sf_dir)))
     if pins is None:

@@ -22,6 +22,12 @@ silently reintroduce them (VERDICT r6 item 6):
    read launches a schema-inference Spark job per call) and the
    events ``ts`` conversion.
 
+5. A soft failure or a session mutation — ``warnings.warn(`` lets a
+   non-converged loop hand back a partial answer, and
+   ``setCheckpointDir(`` changes the caller's session. Non-convergence
+   raises (``operators.components.cc_labels``); operators leave the
+   session as they found it.
+
 The lints run over the query/operator sources as text; known-safe
 sites are allowlisted by (path suffix, line-content marker) so a line
 move doesn't break the pin but a NEW occurrence fails loudly.
@@ -174,3 +180,33 @@ def test_fixture_tables_read_through_load_table():
 )
 def test_bare_fixture_read_lint(line, bad):
     assert bool(_BARE_FIXTURE_READ.search(line)) is bad
+
+
+# a warn-and-continue failure path, or an operator mutating the session
+_SOFT_FAIL_OR_SESSION_MUTATION = re.compile(r"\bwarnings\.warn\(|\bsetCheckpointDir\(")
+
+
+def test_no_soft_failures_or_session_mutation():
+    hits = [
+        (str(p.relative_to(PKG)), i, line.strip())
+        for p in sorted(PKG.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if _SOFT_FAIL_OR_SESSION_MUTATION.search(line)
+    ]
+    assert not hits, (
+        "non-convergence must raise, not warn, and operators must not "
+        f"mutate the session (CLAUDE.md rule): {hits}"
+    )
+
+
+@pytest.mark.parametrize(
+    "line, bad",
+    [
+        ("warnings.warn(msg, RuntimeWarning, stacklevel=2)", True),
+        ("spark.sparkContext.setCheckpointDir(checkpoint_dir)", True),
+        ("raise RuntimeError(msg)", False),
+        ("df.localCheckpoint(eager=True)", False),
+    ],
+)
+def test_soft_failure_lint(line, bad):
+    assert bool(_SOFT_FAIL_OR_SESSION_MUTATION.search(line)) is bad

@@ -254,68 +254,6 @@ def test_embedding_dup_lsh_finds_allpairs_pairs(spark, sf_dir):
     assert recall == 1.0, f"LSH dup-pair recall {recall:.2f} < 1.0 ({len(exact)} pairs)"
 
 
-def test_dedup_clusters_lineage_truncated(spark):
-    """Each iteration localCheckpoints, so the returned frame's plan
-    must be one round deep (a checkpoint scan), not the accumulated
-    20-round join tree — iterative lineage growth means quadratic
-    recompute and analyzer blowup at scale."""
-    from pyspark.sql import functions as F
-
-    from glue_etl_pyspark_spark.operators.dedup import dedup_clusters
-
-    # 3-chain: 1-2, 2-3 plus an isolated pair; diameter 2 -> converges
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
-    )
-    labels = dedup_clusters(pairs, max_iterations=8)
-    plan = labels._jdf.queryExecution().optimizedPlan().toString()
-    # a truncated plan scans the checkpoint RDD; the accumulated plan
-    # would contain one Join per round
-    assert "Join" not in plan, plan[:2000]
-    lab = {r.id: r.cluster_id for r in labels.collect()}
-    assert lab == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-
-def test_dedup_clusters_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir switches lineage truncation to fault-tolerant
-    checkpoints: same labels, checkpoint files actually materialized
-    under the given dir (executor loss then costs one round, not the
-    job — the 100 TB-run option)."""
-    import os
-
-    from glue_etl_pyspark_spark.operators.dedup import dedup_clusters
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
-    )
-    ckpt = str(tmp_path / "ckpt")
-    labels = dedup_clusters(pairs, max_iterations=8, checkpoint_dir=ckpt)
-    lab = {r.id: r.cluster_id for r in labels.collect()}
-    assert lab == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    found = [f for _, _, fs in os.walk(ckpt) for f in fs]
-    assert found, "no reliable checkpoint files were written"
-
-
-def test_dedup_clusters_surfaces_non_convergence(spark):
-    """A diameter-4 chain cannot converge in 1 iteration — the partial
-    result must warn (default) or raise (strict)."""
-    import warnings
-
-    import pytest
-
-    from glue_etl_pyspark_spark.operators.dedup import dedup_clusters
-
-    chain = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a bigint, id_b bigint"
-    )
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        dedup_clusters(chain, max_iterations=1)
-    assert any("did not converge" in str(x.message) for x in w)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(chain, max_iterations=1, strict=True)
-
-
 def test_ivf_index_save_load_roundtrip(spark, sf_dir, tmp_path):
     """Build-once/search-many: a persisted index reloaded from parquet
     must return exactly the same neighbors as the fresh build."""

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import duckdb
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 rows_strategy = st.lists(
@@ -164,18 +164,18 @@ def test_range_join_matches_bruteforce(spark, data):
 
 @settings(max_examples=15, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
+@example(edges=[(9, 2), (2, 9), (2, 9), (4, 4), (2, 6), (6, 1)])
 @given(edges=st.lists(st.tuples(st.integers(0, 30), st.integers(0, 30)),
                       min_size=1, max_size=40))
-def test_dedup_clusters_match_union_find(spark, edges):
-    """Iterative min-label propagation must produce exactly the
-    connected components a union-find gives, labels = component min."""
-    from glue_etl_pyspark_spark.operators.dedup import dedup_clusters
+def test_cc_labels_match_union_find(spark, edges):
+    """The certified min-label fixpoint must produce exactly the
+    connected components a union-find gives, labels = component min.
+    The pairs go in raw — duplicates, both orientations and self-loops
+    included — so cc_labels' own symmetrization is what is tested."""
+    from glue_etl_pyspark_spark.operators.components import cc_labels
 
-    pairs = [(a, b) for a, b in edges if a != b]
-    if not pairs:
-        return
-    pdf = spark.createDataFrame(pairs, "id_a bigint, id_b bigint")
-    got = {r.id: r.cluster_id for r in dedup_clusters(pdf, max_iterations=40).collect()}
+    pdf = spark.createDataFrame(edges, "u bigint, v bigint")
+    got = {r.node: r.label for r in cc_labels(pdf).collect()}
 
     parent = {}
     def find(x):
@@ -188,7 +188,7 @@ def test_dedup_clusters_match_union_find(spark, edges):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    for a, b in pairs:
+    for a, b in edges:
         union(a, b)
     want = {x: find(x) for x in parent}
     assert got == want
