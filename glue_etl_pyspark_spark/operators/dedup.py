@@ -195,16 +195,16 @@ def hashed_shingles_kernel(
     the rotate-xor fold is uint64 math identical to
     ``_rotl64(a,k)^b``.
 
-    Why it's (only modestly, ~1.2x at n=4) faster: each UNIQUE token
-    is hashed once per partition and cached, and the n-1 fold passes
-    are vectorized numpy shifts instead of interpreted zip_with
-    element-ops. The expression path was already cheap (xxhash64 +3
-    zip_with passes ≈ 4 element-ops/token, vs simhash's 64-wide fold
-    where the same rework bought 3x), so most of the stage is scan +
-    tokenize, which both paths pay. The kernel's edge grows with n
-    (fold passes scale with n-1; the cache amortizes token hashing
-    across the corpus' Zipf head) — measured sf0.1 n=4 shingle stage:
-    1.15 s -> 0.92 s."""
+    Why it's faster: each UNIQUE token is hashed once per partition
+    and cached, and the n-1 fold passes are vectorized numpy shifts
+    instead of interpreted zip_with element-ops. The lead is 0.7-0.9 s
+    a query at sf0.1 (4 cores, 4 interleaved warm pairs, identical
+    digests, kernel faster in every pair): with the expression path
+    swapped in, ``dedup_ngram_jaccard`` goes from a 2.37 s to a 3.24 s
+    median and ``dedup_clusters_minlabel`` from 4.64 s to 5.35 s. That
+    is above the 240-310 ms fixed cost of an Arrow-Python task, so the
+    kernel stays. The edge grows with n (fold passes scale with n-1;
+    the cache amortizes token hashing across the corpus' Zipf head)."""
     # derive the id type from the input: callers pass string/int ids
     # through ngram_jaccard_pairs, and a hardcoded `long` makes Arrow
     # conversion fail for them (ADVICE r8)

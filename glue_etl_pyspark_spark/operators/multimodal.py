@@ -3,11 +3,10 @@
 Images/audio/video ride through the engine as opaque ``binary``
 columns plus a typed metadata struct. The Spark-side machinery —
 schemas, Arrow-batched UDF signatures, partitioning — is real and
-tested; the actual codec step is stubbed (no image/audio libraries in
-this container) behind ``use_real_decoder``, which raises
-``NotImplementedError`` exactly where a real decoder (PIL/ffmpeg)
-would slot in. The stub derives deterministic fake features from the
-bytes so pipelines are end-to-end testable.
+tested; the actual codec step is a stub (no image/audio libraries are
+installed): each kernel derives deterministic fake output from the
+bytes at the spot where a real decoder (PIL/ffmpeg) would run, so
+pipelines are end-to-end testable.
 """
 
 from __future__ import annotations
@@ -51,9 +50,7 @@ def binary_file_source(spark: SparkSession, path: str, glob: str | None = None) 
     return reader.load(path)
 
 
-def extract_features(
-    media_df: DataFrame, dim: int = 8, use_real_decoder: bool = False
-) -> DataFrame:
+def extract_features(media_df: DataFrame, dim: int = 8) -> DataFrame:
     """Arrow-batched feature extraction over media bytes via
     ``mapInPandas`` (iterator-of-batches: constant memory per task,
     no per-row Python overhead).
@@ -65,11 +62,6 @@ def extract_features(
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in it:
-            if use_real_decoder:
-                raise NotImplementedError(
-                    "real media decoding (PIL/ffmpeg) is not available in "
-                    "this environment; slot the codec in here"
-                )
             medias = pdf["media"]
             digests = [hashlib.sha256(bytes(m)).digest() for m in medias]
             yield pd.DataFrame(
@@ -93,19 +85,14 @@ RESIZED_SCHEMA = (
 )
 
 
-def resize_media(
-    media_df: DataFrame,
-    width: int,
-    height: int,
-    use_real_decoder: bool = False,
-) -> DataFrame:
+def resize_media(media_df: DataFrame, width: int, height: int) -> DataFrame:
     """Arrow-batched image resize over media bytes (``mapInPandas``).
 
     The real transform (PIL ``Image.resize`` — decode, resample,
-    re-encode) slots in behind ``use_real_decoder``; the stub emits a
-    deterministic fake payload of exactly ``width*height`` bytes folded
-    from a sha256 stream of the input, so output sizing, schema, and
-    batch shape are all real and testable. Output metadata carries the
+    re-encode) slots in here; the stub emits a deterministic fake
+    payload of exactly ``width*height`` bytes folded from a sha256
+    stream of the input, so output sizing, schema, and batch shape are
+    all real and testable. Output metadata carries the
     new dimensions — downstream consumers never re-measure payloads.
     """
     import pandas as pd
@@ -114,11 +101,6 @@ def resize_media(
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in it:
-            if use_real_decoder:
-                raise NotImplementedError(
-                    "real image decode/resample (PIL) is not available in "
-                    "this environment; slot the codec in here"
-                )
             out = []
             for m in pdf["media"]:
                 buf = b""
@@ -149,22 +131,16 @@ def sample_frames(
     media_df: DataFrame,
     every_n_bytes: int = 64,
     max_frames: int = 4,
-    use_real_decoder: bool = False,
 ) -> DataFrame:
     """Video frame sampling as a 1→N Arrow-batched expansion
     (``mapInPandas`` rows-out ≠ rows-in — the shape a real ffmpeg
     keyframe sampler needs). The stub treats every ``every_n_bytes``
-    slice of the payload as a 'frame'; the real decoder slots in behind
-    ``use_real_decoder``. Emits (id, mime, frame_idx, frame)."""
+    slice of the payload as a 'frame'; the real decoder slots in
+    there. Emits (id, mime, frame_idx, frame)."""
     import pandas as pd
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in it:
-            if use_real_decoder:
-                raise NotImplementedError(
-                    "real video decoding (ffmpeg) is not available in this "
-                    "environment; slot the frame sampler in here"
-                )
             ids, mimes, idxs, frames = [], [], [], []
             for rid, mime, m in zip(pdf["id"], pdf["mime"], pdf["media"]):
                 data = bytes(m)

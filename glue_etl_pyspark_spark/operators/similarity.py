@@ -110,7 +110,7 @@ def _nearest_cents(
     hash-stable, but 1 interpreted array-aggregate per pair instead of
     3. The 10x scale probe measured the unfactored version at 275 s
     for one 12.9M-pair assignment pass; this is the expression-path
-    fix, and ``_nearest_cents_gemm`` is the vectorized scale path.
+    fix.
 
     Nearest-1 (the bulk assignment case) aggregates with ``min_by``
     over (-cos, cent_id) — map-side partial aggregation shuffles n
@@ -152,54 +152,6 @@ def _nearest_cents(
     )
 
 
-def _nearest_cents_gemm(
-    df: DataFrame, cents: DataFrame, id_out: str, vec_col: str, n: int
-) -> DataFrame:
-    """GEMM twin of ``_nearest_cents`` for bulk assignment at scale:
-    the (tiny) centroid matrix is normalized once and broadcast; each
-    corpus Arrow batch computes one (batch × ncents) float64 matmul
-    and takes top-n per row with a (-sim, cent_id) lexsort — same
-    tie-break and same zero-norm-loses semantics as the expression
-    path. numpy's summation order differs from the expression
-    aggregate at the ulp level, so this path is equality-tested
-    against ``_nearest_cents`` (tests/test_llm_ops.py) rather
-    than being the oracle anchor; use ``ivf_build(assign="gemm")``
-    when the corpus is large enough that interpreted per-pair dots
-    dominate (the 10x probe: 275 s → sub-second per pass)."""
-    import numpy as np
-    import pandas as pd
-
-    cp = cents.select("cent_id", "centroid").toPandas()
-    cm = np.stack([np.asarray(v, dtype=np.float64) for v in cp["centroid"]])
-    cnorms = np.linalg.norm(cm, axis=1, keepdims=True)
-    cm = cm / np.where(cnorms == 0, np.nan, cnorms)
-    cids = cp["cent_id"].to_numpy()
-    bc = df.sparkSession.sparkContext.broadcast((cids, cm))
-
-    def batches(it):
-        cids_, cm_ = bc.value
-        take = min(n, len(cids_))
-        for pdf in it:
-            if pdf.empty:
-                continue
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["__vec"]])
-            norms = np.linalg.norm(m, axis=1, keepdims=True)
-            m = m / np.where(norms == 0, np.nan, norms)
-            sims = m @ cm_.T
-            sims = np.where(np.isnan(sims), -np.inf, sims)
-            order = np.lexsort(
-                (np.broadcast_to(cids_, sims.shape), -sims), axis=1
-            )[:, :take]
-            ids = pdf["__id"].to_numpy()
-            yield pd.DataFrame(
-                {id_out: np.repeat(ids, take), "cent_id": cids_[order].ravel()}
-            )
-
-    return df.select(
-        F.col(id_out).alias("__id"), F.col(vec_col).alias("__vec")
-    ).mapInPandas(batches, schema=f"{id_out} bigint, cent_id bigint")
-
-
 def ivf_auto_strides(n: int) -> tuple[int, int]:
     """Data-adaptive (centroid_stride, train_stride) for an n-vector
     corpus: ncents ≈ √n (the IVF serve-cost optimum for fixed nprobe)
@@ -228,7 +180,6 @@ def ivf_build(
     lloyd_iters: int = 2,
     corpus_id: str = "vec_id",
     vec: str = "embedding",
-    assign: str = "expr",
     train_stride: int | None = 1,
 ) -> tuple[DataFrame, DataFrame]:
     """Build an IVF index: returns ``(centroids, members)`` —
@@ -259,21 +210,11 @@ def ivf_build(
     centroid, so train_stride can grow with n while keeping
     sample ≈ 256·ncents. ncents grows ~√n with nprobe fixed, so the
     probed fraction shrinks with scale. The r11 10x probe (20k
-    vectors, 397 surviving cents): full-train expr build 316 s →
-    sample-trained (stride 4) gemm build 10.3 s + search 3.1 s,
-    recall 1.0 vs brute force on the same queries
+    vectors, 397 surviving cents) kept recall 1.0 vs brute force on
+    the same queries with a stride-4 training sample
     (tests/test_llm_ops.py pins recall ≥ 0.8 for the sampled trainer
     at sf0.01, where near-random vectors make the gate meaningful).
-
-    ``assign`` picks the bulk-assignment kernel: ``"expr"`` (default)
-    is the pure-SQL path the DuckDB oracle mirrors hash-exactly;
-    ``"gemm"`` is the Arrow/numpy matmul path for large corpora —
-    equality-tested against expr, ulp-level float differences possible
-    (see ``_nearest_cents_gemm``).
     """
-    if assign not in ("expr", "gemm"):
-        raise ValueError(f"unknown assign {assign!r} (expr|gemm)")
-    nearest1 = _nearest_cents if assign == "expr" else _nearest_cents_gemm
     if centroid_stride is None or train_stride is None:
         auto_cs, auto_ts = ivf_auto_strides(corpus.count())
         centroid_stride = auto_cs if centroid_stride is None else centroid_stride
@@ -301,7 +242,7 @@ def ivf_build(
     # Each iteration is one window shuffle (assignment) + one groupBy
     # (recompute); centroid frames stay tiny and broadcast.
     for _ in range(lloyd_iters):
-        a = nearest1(
+        a = _nearest_cents(
             train.select("neighbor_id", F.col("__cv").alias("__v")), cents,
             "neighbor_id", "__v", 1,
         )
@@ -330,7 +271,7 @@ def ivf_build(
             .localCheckpoint(eager=True)
         )
 
-    final_assign = nearest1(
+    final_assign = _nearest_cents(
         c.select("neighbor_id", F.col("__cv").alias("__v")), cents,
         "neighbor_id", "__v", 1,
     )

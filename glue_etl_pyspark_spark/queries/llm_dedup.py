@@ -21,6 +21,7 @@ from ..operators.dedup import (
     simhash_pairs,
 )
 from ..registry import query
+from ..session import pinned_confs
 
 _DUCK_TOKS = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')"
 
@@ -649,20 +650,13 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the prefix path chains several windows/joins over a TINY frame:
     # on a vanilla 200-partition session every stage pays 200 tasks.
-    # Pin the shuffle width for the materialization and restore (the
-    # streaming _state_partitions_conf stance applied to batch) — the
-    # driver evaluates queries sequentially, so the set/restore is
-    # race-free. eagerly materialize under the pinned width via
-    # localCheckpoint, then hand back a plain frame.
-    orig = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        out = ngram_jaccard_pairs(
+    # Pin the shuffle width while localCheckpoint materializes the
+    # pairs eagerly, then hand back a plain frame; the driver evaluates
+    # queries sequentially, so the pin is race-free.
+    with pinned_confs(spark, {"spark.sql.shuffle.partitions": "16"}):
+        return ngram_jaccard_pairs(
             corpus, "doc_id", "text", n=3, threshold=0.75, prefix_filter=True
         ).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", orig)
-    return out
 
 
 # --- winnowing fingerprints (r12) --------------------------------------

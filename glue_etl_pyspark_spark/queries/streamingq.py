@@ -13,16 +13,21 @@ scale."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..registry import query
+from ..session import pinned_confs
 from ..streaming.ops import (
+    ROCKSDB_CONFS,
     drain_to_memory,
     events_stream,
     foreach_batch_collect,
     foreach_batch_to_parquet,
+    run_available_now,
 )
 
 # --------------------------------------------------------------------------
@@ -81,8 +86,6 @@ def stream_tumbling_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     instances on local disk). Provider choice relocates state, never
     values: asserted identical to stream_tumbling AND
     window_tumbling_batch in tests/test_streaming.py."""
-    from ..streaming.ops import rocksdb_state_conf
-
     s = events_stream(spark, sf_dir)
     agg = (
         s.withWatermark("ts", "1 hour")
@@ -95,7 +98,7 @@ def stream_tumbling_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    with rocksdb_state_conf(spark):
+    with pinned_confs(spark, ROCKSDB_CONFS):
         return drain_to_memory(agg, mode="complete")
 
 
@@ -455,58 +458,6 @@ def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain_to_memory(out, mode="update")
 
 
-def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4's transformWithStateInPandas — the successor API to
-    applyInPandasWithState (typed state variables on a
-    StatefulProcessor handle instead of a single state tuple): same
-    running per-user count/sum as stream_stateful_counts.
-
-    ENV-GATED, not registered: the API's Python state-server protocol
-    requires ``google.protobuf``, which is absent in this sandbox (no
-    network installs). The applyInPandasWithState query above is the
-    registered §2.10 stateful surface; this function is the documented
-    migration path, exercised by tests/test_streaming.py when protobuf
-    exists (skipped otherwise)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise RuntimeError(
-            "transformWithStateInPandas needs the protobuf package for "
-            "its state-server protocol; install 'protobuf' to use it"
-        ) from e
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", "n bigint, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [round(total, 6)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    s = events_stream(spark, sf_dir)
-    out = s.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType="user_id bigint, n_events bigint, sum_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-    return drain_to_memory(out, mode="update")
-
-
 # --------------------------------------------------------------------------
 # incremental (job bookmark) source
 
@@ -808,30 +759,20 @@ def stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     different SFs isolated; it lives under the atexit-cleaned scratch
     root since the lazy statestore frame reads it at collect time."""
     from ..sources.formats import staging_dir
-    from ..streaming.ops import _state_partitions_conf
 
     ckpt = staging_dir("sgraft_state_inspect_")
     s = events_stream(spark, sf_dir).select("event_type")
     agg = s.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    import os as _os
-
     # NOTE: ckpt must outlive the returned (lazy) DataFrame — the
     # statestore scan reads it at collection time, so no cleanup here;
     # the scratch root it lives under is removed atexit.
-    name = f"state_inspect_{_os.getpid()}_{id(ckpt)}"
-    with _state_partitions_conf(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(120)
-    if not finished:
-        q.stop()
-        raise TimeoutError("state-inspect drain did not finish")
+    writer = (
+        agg.writeStream.format("memory")
+        .queryName(f"state_inspect_{os.getpid()}_{id(ckpt)}")
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt)
+    )
+    run_available_now(spark, writer, "state-inspect drain")
     state = spark.read.format("statestore").load(ckpt)
     # the value struct's field is named after the INTERNAL aggregation
     # buffer (e.g. `count`), not the query alias — resolve it by

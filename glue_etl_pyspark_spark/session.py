@@ -20,6 +20,8 @@ tests don't pay 200-partition scheduling overhead.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -56,6 +58,27 @@ def ensure_session_configs(spark: SparkSession) -> SparkSession:
             # it will fail loudly there, which is the right failure mode.
             pass
     return spark
+
+
+@contextmanager
+def pinned_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on ``spark`` for the block, then put every key back
+    as it was — its old value, or unset if it had none — also when the
+    block raises. The one way this package changes a session conf for a
+    while (a stream's state-store count and provider, a batch query's
+    shuffle width): the driver hands us its session, and we leave it as
+    we found it."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, old in prev.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
 
 
 def get_spark(

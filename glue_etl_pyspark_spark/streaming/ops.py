@@ -20,34 +20,27 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..io import parquet_schema
-from ..session import ensure_session_configs
+from ..session import ensure_session_configs, pinned_confs
 
 _MEM_COUNTER = itertools.count()
 
 
-def _default_state_partitions() -> int:
-    """State-store count for bounded replay drains. Sized to the
-    replays' STATE VOLUME (all bounded fixtures here carry <= tens of
-    thousands of state rows, where per-batch store open/commit
-    overhead dominates — measured min 1.033 s @ 8 vs 0.837 s @ 4 vs
-    0.874 s @ 2 on the sf0.1 tumbling drain, r16; re-proven under
-    driver conditions r17 — fresh-process cold-JVM median-of-3), not
-    to the core count. Externalized for bigger replays / real state
-    volumes. Read at CALL time (not import) so tests / mid-session
-    env changes take effect (ADVICE r16)."""
-    return int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "4"))
-
-
-def _resolve_state_partitions(state_partitions: int | None) -> int | None:
-    """Drain-arg convention: None -> the env-resolved default (at call
-    time); 0 or negative -> inherit the session's shuffle conf (the
-    old ``None`` spelling — no current caller uses it); positive ->
-    pin exactly that many state stores."""
-    if state_partitions is None:
-        return _default_state_partitions()
-    return state_partitions if state_partitions > 0 else None
+# State-store count of every drain. A stateful query takes its store
+# count from spark.sql.shuffle.partitions at its FIRST micro-batch and
+# the checkpoint keeps it, so it is sized to the state volume (these
+# bounded replays hold at most tens of thousands of state rows, where
+# per-store open/commit overhead per batch dominates), not to the batch
+# shuffle width. sf0.1 tumbling drain, min wall: 1.033 s at 8 stores,
+# 0.837 s at 4, 0.874 s at 2 (r16; re-measured fresh-process r17). A
+# vanilla 200-partition session makes tiny drains ~4x slower.
+STATE_PARTITIONS = 4
+# A drain not done within this budget is stopped and raises: its sink
+# would hold a partial answer.
+AWAIT_SECONDS = 120
+_STATE_CONFS = {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
 
 
 STAGE_ROOT = "/tmp/glue_etl_pyspark_spark_stream_stage"
@@ -139,83 +132,41 @@ def events_stream(
     return stream
 
 
-class _state_partitions_conf:
-    """Temporarily pin spark.sql.shuffle.partitions around a stream
-    start: a stateful streaming query's STATE STORE count is fixed by
-    this conf at its first micro-batch (and persisted in the
-    checkpoint), so it must be sized to expected state volume, not
-    inherited from the batch shuffle width — each state partition
-    carries per-batch store open/commit overhead (measured ~4x wall
-    time at 32-vs-8 on the 100k-event replay; a vanilla 200-partition
-    session is worse). At scale you size UP for state that doesn't fit
-    N stores; these bounded replays size down."""
-
-    def __init__(self, spark, n: int | None):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        if self.n is not None:
-            self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        if self.n is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+# The RocksDB state-store provider, for keyed state bigger than the
+# executor heap: the default HDFS-backed provider keeps each partition's
+# state map on the heap, RocksDB spills to local disk with an off-heap
+# block cache. Like the store count, the provider is captured at the
+# query's first micro-batch (and recorded in the checkpoint), so the
+# confs stay pinned for the whole drain. The provider changes where
+# state lives, never values (stream≡stream≡batch equality test).
+ROCKSDB_CONFS = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+    # changelog checkpointing: commit the per-batch delta instead of
+    # snapshotting the full RocksDB instance — the production mode for
+    # large state (upload cost stops scaling with state size; recovery
+    # replays the changelog onto the last snapshot)
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+}
 
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
+def run_available_now(spark: SparkSession, writer: DataStreamWriter, what: str) -> None:
+    """The package's one availableNow start: run ``writer`` over the
+    stream's whole backlog with STATE_PARTITIONS state stores, wait
+    AWAIT_SECONDS for it to finish, and otherwise stop the query and
+    raise ``TimeoutError`` naming ``what``."""
+    with pinned_confs(spark, _STATE_CONFS):
+        q = writer.trigger(availableNow=True).start()
+        if not q.awaitTermination(AWAIT_SECONDS):
+            q.stop()
+            raise TimeoutError(
+                f"{what} did not finish within {AWAIT_SECONDS}s; "
+                "its sink would hold a partial answer"
+            )
 
 
-class rocksdb_state_conf:
-    """Temporarily select the RocksDB state-store provider around a
-    stream start. The provider is captured at the query's FIRST
-    micro-batch (and recorded in the checkpoint), like the partition
-    count — so it must be pinned for the whole drain, then restored.
-
-    This is the 100 TB keyed-state answer: the default HDFS-backed
-    provider keeps each partition's full state map on the executor
-    heap, while RocksDB spills to local disk with an off-heap block
-    cache, so watermark-bounded state (stream-stream joins, long
-    session windows) can exceed memory. Provider choice changes WHERE
-    state lives, never values — pinned by the
-    stream≡stream≡batch equality test."""
-
-    _CONFS = {
-        "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
-        # changelog checkpointing: commit the per-batch delta instead
-        # of snapshotting the full RocksDB instance — the production
-        # mode for large state (snapshot upload cost stops scaling
-        # with state size; recovery replays changelog onto the last
-        # snapshot)
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-    }
-
-    def __init__(self, spark):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = {
-            k: self.spark.conf.get(k, None) for k in self._CONFS
-        }
-        for k, v in self._CONFS.items():
-            self.spark.conf.set(k, v)
-
-    def __exit__(self, *exc):
-        for k, old in self.prev.items():
-            if old is None:
-                self.spark.conf.unset(k)
-            else:
-                self.spark.conf.set(k, old)
-
-
-def drain_to_memory(
-    df: DataFrame,
-    mode: str = "append",
-    await_seconds: int = 120,
-    state_partitions: int | None = None,
-) -> DataFrame:
+def drain_to_memory(df: DataFrame, mode: str = "append") -> DataFrame:
     """Run a bounded streaming query to completion (availableNow) into
     a memory sink and return the sink's contents as a batch DataFrame.
 
@@ -223,38 +174,16 @@ def drain_to_memory(
     deployment replaces it with writeStream.format(...)
     .option("checkpointLocation", ...).start() and keeps the same
     upstream plan. Memory sink is driver-local by design; only use it
-    on aggregated/bounded outputs. ``state_partitions`` sizes the
-    state-store count for the bounded replay (see
-    _state_partitions_conf); None (the default) resolves
-    SPARK_GRAFT_STATE_PARTITIONS at call time, 0 inherits the session
-    conf (see _resolve_state_partitions).
+    on aggregated/bounded outputs.
     """
     name = f"mem_sink_{os.getpid()}_{next(_MEM_COUNTER)}"
-    spark = df.sparkSession
-    with _state_partitions_conf(spark, _resolve_state_partitions(state_partitions)):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(await_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"streaming drain {name!r} did not finish within {await_seconds}s; "
-            "sink contents would be partial"
-        )
-    return spark.table(name)
+    writer = df.writeStream.format("memory").queryName(name).outputMode(mode)
+    run_available_now(df.sparkSession, writer, f"streaming drain {name!r}")
+    return df.sparkSession.table(name)
 
 
 def drain_micro_batches(
-    df: DataFrame,
-    mode: str = "complete",
-    total_input: int | None = None,
-    await_seconds: int = 120,
-    state_partitions: int | None = None,
+    df: DataFrame, mode: str = "complete", total_input: int | None = None
 ) -> DataFrame:
     """Drain a stream whose source does NOT support availableNow (e.g.
     Python SimpleDataSourceStreamReader sources fall back to
@@ -274,9 +203,9 @@ def drain_micro_batches(
     name = f"mem_sink_{os.getpid()}_{next(_MEM_COUNTER)}"
     # conf stays pinned until the query stops: micro-batches keep
     # planning (and reading the conf) for the query's whole life
-    with _state_partitions_conf(df.sparkSession, _resolve_state_partitions(state_partitions)):
+    with pinned_confs(df.sparkSession, _STATE_CONFS):
         q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
-        deadline = time.time() + await_seconds
+        deadline = time.time() + AWAIT_SECONDS
         done = False
         rows_by_batch: dict[int, int] = {}
         last_batch_rows = None
@@ -294,19 +223,17 @@ def drain_micro_batches(
                 done = True
                 break
         q.stop()
-        q.awaitTermination(await_seconds)
+        q.awaitTermination(AWAIT_SECONDS)
     if not done:
         want = f"{total_input} rows" if total_input is not None else "an idle batch"
         raise TimeoutError(
             f"streaming drain {name!r} did not reach {want} within "
-            f"{await_seconds}s (committed {sum(rows_by_batch.values())} rows)"
+            f"{AWAIT_SECONDS}s (committed {sum(rows_by_batch.values())} rows)"
         )
     return df.sparkSession.table(name)
 
 
-def foreach_batch_collect(
-    df: DataFrame, await_seconds: int = 120, state_partitions: int | None = None
-) -> DataFrame:
+def foreach_batch_collect(df: DataFrame) -> DataFrame:
     """TEST-ONLY demo drain: run a stream through ``foreachBatch``
     (the Glue streaming-sink hook), appending each micro-batch's rows
     into a DRIVER-SIDE accumulator, and return them as one batch
@@ -319,36 +246,18 @@ def foreach_batch_collect(
     to a distributed sink — see ``foreach_batch_to_parquet`` for that
     shape. foreachBatch itself still runs the batch plan distributed;
     only this demo's final hop collects."""
-    spark = df.sparkSession
     batches: list = []
-    schema = df.schema
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batches.extend(batch_df.collect())
 
-    with _state_partitions_conf(spark, _resolve_state_partitions(state_partitions)):
-        q = (
-            df.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(await_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"foreachBatch drain did not finish within {await_seconds}s; "
-            "collected batches would be partial"
-        )
-    return spark.createDataFrame(batches, schema) if batches else spark.createDataFrame([], schema)
+    writer = df.writeStream.foreachBatch(sink).outputMode("update")
+    run_available_now(df.sparkSession, writer, "foreachBatch drain")
+    return df.sparkSession.createDataFrame(batches, df.schema)
 
 
 def foreach_batch_to_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    await_seconds: int = 120,
-    state_partitions: int | None = None,
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """Production-shape foreachBatch sink: every micro-batch is
     written DISTRIBUTED as partitioned parquet under
@@ -370,20 +279,8 @@ def foreach_batch_to_parquet(
             w = w.partitionBy(*part)
         w.parquet(f"{path}/batch_id={batch_id}")
 
-    with _state_partitions_conf(df.sparkSession, _resolve_state_partitions(state_partitions)):
-        q = (
-            df.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(await_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"foreachBatch parquet sink did not finish within {await_seconds}s; "
-            f"{path} holds a partial batch set"
-        )
+    writer = df.writeStream.foreachBatch(sink).outputMode("append")
+    run_available_now(df.sparkSession, writer, f"foreachBatch parquet sink to {path}")
 
 
 def stage_events_with_sentinel(sf_dir: str, gap_days: int = 10) -> str:

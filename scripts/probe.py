@@ -26,6 +26,7 @@ snapshot.
 from __future__ import annotations
 
 import argparse
+import filecmp
 import json
 import os
 import sys
@@ -64,8 +65,10 @@ def build_clone(src: str, scale: int, out: str) -> str:
     import duckdb
 
     os.makedirs(out, exist_ok=True)
-    link = f"{out}/region.parquet"
-    if os.path.lexists(link) and os.readlink(link) != os.path.abspath(f"{src}/region.parquet"):
+    # a clone belongs to every fixture with the same bytes, so checkouts
+    # with identical fixtures share it
+    region = f"{out}/region.parquet"
+    if os.path.lexists(region) and not filecmp.cmp(region, f"{src}/region.parquet", shallow=False):
         sys.exit(f"probe: {out} is a clone of another fixture; remove it first")
     for t in TABLE_NAMES:
         dst = f"{out}/{t}.parquet"

@@ -28,6 +28,13 @@ silently reintroduce them (VERDICT r6 item 6):
    raises (``operators.components.cc_labels``); operators leave the
    session as they found it.
 
+6. A hand-rolled stream start or shuffle-width pin — ``.trigger(``,
+   ``.awaitTermination(`` or ``conf.set("spark.sql.shuffle.partitions"``
+   outside ``streaming/ops.py`` and ``session.py``. Drains start
+   through ``streaming.ops.run_available_now`` (its ``STATE_PARTITIONS``
+   sizes the state stores) and temporary confs go through
+   ``session.pinned_confs``, which restores them.
+
 The lints run over the query/operator sources as text; known-safe
 sites are allowlisted by (path suffix, line-content marker) so a line
 move doesn't break the pin but a NEW occurrence fails loudly.
@@ -210,3 +217,42 @@ def test_no_soft_failures_or_session_mutation():
 )
 def test_soft_failure_lint(line, bad):
     assert bool(_SOFT_FAIL_OR_SESSION_MUTATION.search(line)) is bad
+
+
+# a stream start, a stream wait or a shuffle-width pin outside the two
+# modules that own them
+_HAND_ROLLED_DRAIN = re.compile(
+    r"\.trigger\(|\.awaitTermination\(|conf\.set\(\s*[\"']spark\.sql\.shuffle\.partitions[\"']"
+)
+_DRAIN_OWNERS = (PKG / "streaming" / "ops.py", PKG / "session.py")
+
+
+def test_one_stream_drain_path():
+    hits = [
+        (str(p.relative_to(PKG)), i, line.strip())
+        for p in sorted(PKG.rglob("*.py"))
+        if p not in _DRAIN_OWNERS
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if _HAND_ROLLED_DRAIN.search(line)
+    ]
+    assert not hits, (
+        "hand-rolled stream start or shuffle-width pin — drain through "
+        "streaming.ops.run_available_now and pin confs with "
+        f"session.pinned_confs (CLAUDE.md rule): {hits}"
+    )
+
+
+@pytest.mark.parametrize(
+    "line, bad",
+    [
+        (".trigger(availableNow=True)", True),
+        ("finished = q.awaitTermination(120)", True),
+        ('spark.conf.set("spark.sql.shuffle.partitions", "16")', True),
+        ("spark.conf.set('spark.sql.shuffle.partitions', orig)", True),
+        ("run_available_now(spark, writer, \"state-inspect drain\")", False),
+        ('with pinned_confs(spark, {"spark.sql.shuffle.partitions": "16"}):', False),
+        ('spark.conf.get("spark.sql.shuffle.partitions")', False),
+    ],
+)
+def test_hand_rolled_drain_lint(line, bad):
+    assert bool(_HAND_ROLLED_DRAIN.search(line)) is bad

@@ -732,7 +732,6 @@ _REVIEWED_BROADCAST_SITES = {
     ("queries/aggregates.py", "mids"): 1,
     ("operators/packing.py", "bases"): 1,
     ("operators/similarity.py", ""): 1,
-    ("operators/similarity.py", "(cids"): 1,
     ("operators/similarity.py", "(qids"): 1,
     ("operators/similarity.py", "q"): 2,
     # r17: events_winsorize_bounds driver-literal per-type counts

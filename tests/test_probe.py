@@ -77,3 +77,26 @@ def test_probe_reports_jobs(probe, spark, clone):
     assert out["wall_s"] > 0
     assert out["layers"]["driver.jobs"] >= 1
     assert out["top_stages"] and out["top_stages"][0]["tasks"] >= 1
+
+
+def test_clone_is_shared_by_identical_fixtures(probe, smoke_dir, clone, tmp_path):
+    """A second checkout whose fixture has the same bytes reuses the
+    clone: it is matched by content, not by the link's path."""
+    import shutil
+
+    twin = tmp_path / "twin_fixture"
+    twin.mkdir()
+    shutil.copy(f"{smoke_dir}/region.parquet", twin / "region.parquet")
+    assert probe.build_clone(str(twin), SCALE, clone) == clone
+
+
+def test_clone_of_another_fixture_exits(probe, clone, tmp_path):
+    other = tmp_path / "other_fixture"
+    other.mkdir()
+    with duckdb.connect() as con:
+        con.execute(
+            f"COPY (SELECT 0 AS r_regionkey, 'ELSEWHERE' AS r_name) "
+            f"TO '{other}/region.parquet' (FORMAT parquet)"
+        )
+    with pytest.raises(SystemExit, match="clone of another fixture"):
+        probe.build_clone(str(other), SCALE, clone)

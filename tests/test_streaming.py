@@ -100,42 +100,6 @@ def test_stream_stateful_counts_match_batch(spark, smoke_dir):
     assert _rows(out, cols) == _rows(batch, cols)
 
 
-def test_transform_with_state_matches_batch(spark, smoke_dir):
-    """transformWithStateInPandas (Spark 4 stateful API) needs
-    google.protobuf for its state-server protocol — absent in this
-    sandbox, so the surface is env-gated (see streamingq.py) and this
-    equality check runs only where protobuf exists."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from glue_etl_pyspark_spark.queries.streamingq import (
-        stream_transform_with_state,
-    )
-
-    out = stream_transform_with_state(spark, smoke_dir)
-    batch = _run(spark, smoke_dir, "stream_stateful_batch")
-    cols = ["user_id", "n_events", "sum_value"]
-    assert _rows(out, cols) == _rows(batch, cols)
-
-
-def test_transform_with_state_gate_raises_cleanly(spark, smoke_dir):
-    """Without protobuf the gated wrapper must fail fast with guidance,
-    not a deep py4j stack."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        pytest.skip("protobuf present; gate inactive")
-    except ImportError:
-        pass
-    from glue_etl_pyspark_spark.queries.streamingq import (
-        stream_transform_with_state,
-    )
-
-    with pytest.raises(RuntimeError, match="protobuf"):
-        stream_transform_with_state(spark, smoke_dir)
-
-
 def test_stream_foreachbatch_totals(spark, smoke_dir):
     out = _run(spark, smoke_dir, "stream_foreachbatch")
     assert out.count() == 5  # one row per event_type
@@ -437,17 +401,11 @@ def test_rocksdb_state_store_provider(spark, smoke_dir):
     import tempfile
 
     from glue_etl_pyspark_spark.io import load_table
-    from glue_etl_pyspark_spark.streaming.ops import events_stream
+    from glue_etl_pyspark_spark.session import pinned_confs
+    from glue_etl_pyspark_spark.streaming.ops import ROCKSDB_CONFS, events_stream
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(key, None)
     ckpt = tempfile.mkdtemp(prefix="sgraft_rocksdb_")
-    try:
-        spark.conf.set(key, rocks)
+    with pinned_confs(spark, ROCKSDB_CONFS):
         agg = events_stream(spark, smoke_dir).groupBy("event_type").count()
         q = (
             agg.writeStream.format("memory")
@@ -458,11 +416,6 @@ def test_rocksdb_state_store_provider(spark, smoke_dir):
             .start()
         )
         assert q.awaitTermination(120)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     got = {
         (r["event_type"], r["count"])
         for r in spark.table("rocksdb_probe").collect()
@@ -477,6 +430,9 @@ def test_rocksdb_state_store_provider(spark, smoke_dir):
     assert got == want
     state = spark.read.format("statestore").load(ckpt)
     assert state.count() == len(want)
+    # the checkpoint records the provider the drain really ran with
+    with open(f"{ckpt}/offsets/0") as f:
+        assert ROCKSDB_CONFS["spark.sql.streaming.stateStore.providerClass"] in f.read()
 
 
 def test_foreachbatch_retry_is_exactly_once(spark, smoke_dir, tmp_path):
@@ -659,3 +615,98 @@ def test_sentinel_staging_handles_directory_tables(spark, smoke_dir, tmp_path):
     # the staged dir must read back as real rows + the 2 sentinels
     n = spark.read.parquet(staged).count()
     assert n == 400 + 2
+
+
+def test_pinned_confs_restores_set_and_unset_keys(spark):
+    """pinned_confs puts a key that had a value back to that value and
+    unsets a key that had none, also when the block raises."""
+    import pytest
+
+    from glue_etl_pyspark_spark.session import pinned_confs
+
+    was_set, was_unset = "spark.sql.shuffle.partitions", "spark.sql.graftTest.pinned"
+    before = spark.conf.get(was_set)
+    assert spark.conf.get(was_unset, None) is None
+    pins = {was_set: "3", was_unset: "on"}
+    with pinned_confs(spark, pins):
+        assert spark.conf.get(was_set) == "3" and spark.conf.get(was_unset) == "on"
+    assert spark.conf.get(was_set) == before
+    assert spark.conf.get(was_unset, None) is None
+    with pytest.raises(RuntimeError, match="inside the pin"):
+        with pinned_confs(spark, pins):
+            raise RuntimeError("inside the pin")
+    assert spark.conf.get(was_set) == before
+    assert spark.conf.get(was_unset, None) is None
+
+
+def _state_store_counts(spark, ckpt):
+    """Store count per stateful operator from the checkpoint's state
+    metadata, checked against the partition ids the statestore reader
+    sees."""
+    ids = {r.partition_id for r in spark.read.format("statestore").load(ckpt).collect()}
+    counts = [r.numPartitions for r in spark.read.format("state-metadata").load(ckpt).collect()]
+    assert ids and max(ids) < min(counts), (ids, counts)
+    return counts
+
+
+def test_drain_pins_state_stores_and_restores_shuffle_width(spark, smoke_dir, tmp_path):
+    """A drain runs with exactly STATE_PARTITIONS state stores, however
+    wide the session's shuffle is, and leaves the session's width as
+    it found it."""
+    import os
+
+    from glue_etl_pyspark_spark.session import pinned_confs
+    from glue_etl_pyspark_spark.streaming.ops import (
+        STATE_PARTITIONS,
+        drain_to_memory,
+        events_stream,
+    )
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert before != str(STATE_PARTITIONS)
+    root = str(tmp_path / "ckpts")
+    agg = events_stream(spark, smoke_dir).groupBy("event_type").count()
+    with pinned_confs(spark, {"spark.sql.streaming.checkpointLocation": root}):
+        out = drain_to_memory(agg, mode="complete")
+    assert out.count() == 5
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    (name,) = os.listdir(root)
+    assert _state_store_counts(spark, os.path.join(root, name)) == [STATE_PARTITIONS]
+
+
+def test_stream_state_inspect_pins_store_count(spark, smoke_dir, monkeypatch):
+    """stream_state_inspect drains through the shared start, so its
+    checkpoint has STATE_PARTITIONS stores too."""
+    from glue_etl_pyspark_spark.sources import formats
+    from glue_etl_pyspark_spark.streaming.ops import STATE_PARTITIONS
+
+    made, real = [], formats.staging_dir
+
+    def recording_staging_dir(prefix):
+        made.append(real(prefix))
+        return made[-1]
+
+    monkeypatch.setattr(formats, "staging_dir", recording_staging_dir)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    out = _run(spark, smoke_dir, "stream_state_inspect")
+    assert out.count() == 5
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    (ckpt,) = made
+    assert _state_store_counts(spark, ckpt) == [STATE_PARTITIONS]
+
+
+def test_run_available_now_times_out_loudly(spark, smoke_dir, monkeypatch):
+    """A drain that outlives AWAIT_SECONDS is stopped and raises
+    instead of handing back a partial sink; the session's shuffle width
+    is restored on that path too."""
+    import pytest
+
+    from glue_etl_pyspark_spark.streaming import ops
+
+    monkeypatch.setattr(ops, "AWAIT_SECONDS", 0.001)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    agg = ops.events_stream(spark, smoke_dir).groupBy("event_type").count()
+    with pytest.raises(TimeoutError, match="did not finish within"):
+        ops.drain_to_memory(agg, mode="complete")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert not spark.streams.active
