@@ -65,16 +65,22 @@ def build_clone(src: str, scale: int, out: str) -> str:
     import duckdb
 
     os.makedirs(out, exist_ok=True)
-    # a clone belongs to every fixture with the same bytes, so checkouts
-    # with identical fixtures share it
-    region = f"{out}/region.parquet"
-    if os.path.lexists(region) and not filecmp.cmp(region, f"{src}/region.parquet", shallow=False):
-        sys.exit(f"probe: {out} is a clone of another fixture; remove it first")
+    linked = [t for t in TABLE_NAMES if t not in FACT_KEYS or scale == 1]
+    # A clone belongs to every fixture whose linked tables have the same
+    # bytes, so checkouts with identical fixtures share it. Region and
+    # nation are the same at every scale factor, customer, part and
+    # supplier are not; a link into a deleted checkout matches nothing.
+    for t in linked:
+        dst = f"{out}/{t}.parquet"
+        if os.path.lexists(dst) and not (
+            os.path.exists(dst) and filecmp.cmp(dst, f"{src}/{t}.parquet", shallow=False)
+        ):
+            sys.exit(f"probe: {out} is a clone of another fixture; remove it first")
     for t in TABLE_NAMES:
         dst = f"{out}/{t}.parquet"
         if os.path.lexists(dst):
             continue
-        if t not in FACT_KEYS or scale == 1:
+        if t in linked:
             os.symlink(os.path.abspath(f"{src}/{t}.parquet"), dst)
             continue
         shifted = ", ".join(f"{k} + c * {KEY_SHIFT} AS {k}" for k in FACT_KEYS[t])

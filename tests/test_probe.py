@@ -86,17 +86,25 @@ def test_clone_is_shared_by_identical_fixtures(probe, smoke_dir, clone, tmp_path
 
     twin = tmp_path / "twin_fixture"
     twin.mkdir()
-    shutil.copy(f"{smoke_dir}/region.parquet", twin / "region.parquet")
+    for t in probe.TABLE_NAMES:
+        shutil.copy(f"{smoke_dir}/{t}.parquet", twin / f"{t}.parquet")
     assert probe.build_clone(str(twin), SCALE, clone) == clone
 
 
-def test_clone_of_another_fixture_exits(probe, clone, tmp_path):
-    other = tmp_path / "other_fixture"
-    other.mkdir()
-    with duckdb.connect() as con:
-        con.execute(
-            f"COPY (SELECT 0 AS r_regionkey, 'ELSEWHERE' AS r_name) "
-            f"TO '{other}/region.parquet' (FORMAT parquet)"
-        )
+def test_clone_of_another_scale_factor_exits(probe, sf_dir, clone):
+    """Region and nation read back the same at every scale factor; the
+    dimensions that grow with it still tell the fixtures apart."""
     with pytest.raises(SystemExit, match="clone of another fixture"):
-        probe.build_clone(str(other), SCALE, clone)
+        probe.build_clone(sf_dir, SCALE, clone)
+
+
+def test_clone_linked_into_a_deleted_checkout_exits(probe, smoke_dir, tmp_path):
+    import shutil
+
+    gone = tmp_path / "gone_fixture"
+    shutil.copytree(smoke_dir, gone)
+    out = str(tmp_path / "orphan")
+    probe.build_clone(str(gone), 1, out)
+    shutil.rmtree(gone)
+    with pytest.raises(SystemExit, match="clone of another fixture"):
+        probe.build_clone(smoke_dir, 1, out)

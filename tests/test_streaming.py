@@ -402,20 +402,23 @@ def test_rocksdb_state_store_provider(spark, smoke_dir):
 
     from glue_etl_pyspark_spark.io import load_table
     from glue_etl_pyspark_spark.session import pinned_confs
-    from glue_etl_pyspark_spark.streaming.ops import ROCKSDB_CONFS, events_stream
+    from glue_etl_pyspark_spark.streaming.ops import (
+        ROCKSDB_CONFS,
+        STATE_PARTITIONS,
+        events_stream,
+        run_available_now,
+    )
 
     ckpt = tempfile.mkdtemp(prefix="sgraft_rocksdb_")
     with pinned_confs(spark, ROCKSDB_CONFS):
         agg = events_stream(spark, smoke_dir).groupBy("event_type").count()
-        q = (
+        writer = (
             agg.writeStream.format("memory")
             .queryName("rocksdb_probe")
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        assert q.awaitTermination(120)
+        run_available_now(spark, writer, "rocksdb probe")
     got = {
         (r["event_type"], r["count"])
         for r in spark.table("rocksdb_probe").collect()
@@ -430,6 +433,7 @@ def test_rocksdb_state_store_provider(spark, smoke_dir):
     assert got == want
     state = spark.read.format("statestore").load(ckpt)
     assert state.count() == len(want)
+    assert _state_store_counts(spark, ckpt) == [STATE_PARTITIONS]
     # the checkpoint records the provider the drain really ran with
     with open(f"{ckpt}/offsets/0") as f:
         assert ROCKSDB_CONFS["spark.sql.streaming.stateStore.providerClass"] in f.read()
