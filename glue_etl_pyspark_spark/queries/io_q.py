@@ -112,13 +112,11 @@ def sink_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered on the partition column — static partition pruning skips
     every other year's directory (Glue push_down_predicate). At 100 TB
     this is the difference between scanning 1/7th and all of it."""
-    orders = load_table(spark, sf_dir, "orders")
-    path = write_partitioned_parquet(
-        orders.withColumn("order_year", F.year("o_orderdate")),
-        scratch_dir("orders_partitioned"),
-        ["order_year"],
-    )
-    back = spark.read.parquet(path).filter(F.col("order_year") == 1997)
+    frame = load_table(spark, sf_dir, "orders").withColumn("order_year", F.year("o_orderdate"))
+    path = write_partitioned_parquet(frame, scratch_dir("orders_partitioned"), ["order_year"])
+    # read back with the schema it wrote: a bare read infers it from the
+    # part-file footers with one more Spark job per call
+    back = spark.read.schema(frame.schema).parquet(path).filter(F.col("order_year") == 1997)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"), F.sum("o_totalprice").alias("sum_total")
     )

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..functions.money import MSUM_SQL
 from ..io import load_table, register_views
 from ..registry import query
+from ..session import pinned_confs
 
 STRING_ORACLE = """
 SELECT doc_id,
@@ -649,12 +650,12 @@ def sql_scripting_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT returns; the oracle is the unrolled closed form. Each loop
     iteration is still a full declarative Spark job — scripting
     sequences plans, it never row-loops."""
-    from ..io import register_views
-
     register_views(spark, sf_dir, "orders")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    return spark.sql(
-        """
+    # spark.sql runs a script eagerly (its loop's jobs at the call, a
+    # local-relation result), so scripting is needed only for the call
+    with pinned_confs(spark, {"spark.sql.scripting.enabled": "true"}):
+        return spark.sql(
+            """
         BEGIN
           DECLARE tot BIGINT DEFAULT 0;
           DECLARE m INT DEFAULT 2;
@@ -665,7 +666,7 @@ def sql_scripting_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
           SELECT CAST(4 AS BIGINT) AS checks_run, CAST(tot AS BIGINT) AS total_hits;
         END
         """
-    )
+        )
 
 
 # ---------------------------------------------------------------------------

@@ -248,7 +248,9 @@ def register_python_sources(spark: SparkSession) -> None:
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
     # implementing pushFilters REQUIRES this conf (Spark hard-errors
-    # otherwise); runtime-settable, so a vanilla driver session works
+    # otherwise); runtime-settable, so a vanilla driver session works.
+    # Set for the session, not pinned: every later read of a registered
+    # source is planned with it, long after this call returns.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(ArrowDocsDataSource)
     spark.dataSource.register(SeqStreamDataSource)

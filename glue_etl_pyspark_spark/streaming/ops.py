@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import itertools
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,13 +36,34 @@ _MEM_COUNTER = itertools.count()
 # bounded replays hold at most tens of thousands of state rows, where
 # per-store open/commit overhead per batch dominates), not to the batch
 # shuffle width. sf0.1 tumbling drain, min wall: 1.033 s at 8 stores,
-# 0.837 s at 4, 0.874 s at 2 (r16; re-measured fresh-process r17). A
-# vanilla 200-partition session makes tiny drains ~4x slower.
+# 0.837 s at 4, 0.874 s at 2 (r16; re-measured fresh-process r17). Those
+# walls were taken with the FileContext checkpoint manager, before
+# _DRAIN_CONFS pinned the FileSystem one. A vanilla 200-partition
+# session makes tiny drains ~4x slower.
 STATE_PARTITIONS = 4
 # A drain not done within this budget is stopped and raises: its sink
 # would hold a partial answer.
 AWAIT_SECONDS = 120
-_STATE_CONFS = {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
+# Confs pinned for the whole life of every drain.
+#
+# The checkpoint file manager: Spark's default (FileContext-based) has
+# Hadoop's local FS set each offset, commit, source-log and state-store
+# file's permissions and resolve symlinks, and without the native
+# libhadoop each of those forks a chmod/readlink shell command — ~100
+# helper processes and ~0.3 core-s of their CPU per sf0.1 tumbling
+# drain. The FileSystem-based manager writes a temp file with
+# FileSystem.create and renames it into place, which forks nothing but
+# a directory mkdirs. It is safe here: each drain is the only writer of
+# its own checkpoint dir, FileSystem.rename is atomic on local FS and
+# HDFS, and its check-then-rename gap matters only for two writers on
+# one checkpoint, which Spark already refuses (one active query per
+# checkpoint location).
+_DRAIN_CONFS = {
+    "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    ),
+}
 
 
 STAGE_ROOT = "/tmp/glue_etl_pyspark_spark_stream_stage"
@@ -153,10 +176,11 @@ ROCKSDB_CONFS = {
 
 def run_available_now(spark: SparkSession, writer: DataStreamWriter, what: str) -> None:
     """The package's one availableNow start: run ``writer`` over the
-    stream's whole backlog with STATE_PARTITIONS state stores, wait
+    stream's whole backlog under ``_DRAIN_CONFS`` (STATE_PARTITIONS
+    state stores, the FileSystem-based checkpoint manager), wait
     AWAIT_SECONDS for it to finish, and otherwise stop the query and
     raise ``TimeoutError`` naming ``what``."""
-    with pinned_confs(spark, _STATE_CONFS):
+    with pinned_confs(spark, _DRAIN_CONFS):
         q = writer.trigger(availableNow=True).start()
         if not q.awaitTermination(AWAIT_SECONDS):
             q.stop()
@@ -164,6 +188,19 @@ def run_available_now(spark: SparkSession, writer: DataStreamWriter, what: str) 
                 f"{what} did not finish within {AWAIT_SECONDS}s; "
                 "its sink would hold a partial answer"
             )
+
+
+@contextmanager
+def _memory_sink(spark: SparkSession) -> Iterator[str]:
+    """A fresh memory-sink query name for the block. The sink's temp
+    view is dropped when the block exits: a frame resolved from it with
+    ``spark.table`` inside the block keeps the sink in its own plan,
+    while the view would hold the rows for the session's whole life."""
+    name = f"mem_sink_{os.getpid()}_{next(_MEM_COUNTER)}"
+    try:
+        yield name
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def drain_to_memory(df: DataFrame, mode: str = "append") -> DataFrame:
@@ -176,10 +213,10 @@ def drain_to_memory(df: DataFrame, mode: str = "append") -> DataFrame:
     upstream plan. Memory sink is driver-local by design; only use it
     on aggregated/bounded outputs.
     """
-    name = f"mem_sink_{os.getpid()}_{next(_MEM_COUNTER)}"
-    writer = df.writeStream.format("memory").queryName(name).outputMode(mode)
-    run_available_now(df.sparkSession, writer, f"streaming drain {name!r}")
-    return df.sparkSession.table(name)
+    with _memory_sink(df.sparkSession) as name:
+        writer = df.writeStream.format("memory").queryName(name).outputMode(mode)
+        run_available_now(df.sparkSession, writer, f"streaming drain {name!r}")
+        return df.sparkSession.table(name)
 
 
 def drain_micro_batches(
@@ -200,10 +237,9 @@ def drain_micro_batches(
     if re-summed from the buffer alone."""
     import time
 
-    name = f"mem_sink_{os.getpid()}_{next(_MEM_COUNTER)}"
     # conf stays pinned until the query stops: micro-batches keep
     # planning (and reading the conf) for the query's whole life
-    with pinned_confs(df.sparkSession, _STATE_CONFS):
+    with _memory_sink(df.sparkSession) as name, pinned_confs(df.sparkSession, _DRAIN_CONFS):
         q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
         deadline = time.time() + AWAIT_SECONDS
         done = False
@@ -224,13 +260,13 @@ def drain_micro_batches(
                 break
         q.stop()
         q.awaitTermination(AWAIT_SECONDS)
-    if not done:
-        want = f"{total_input} rows" if total_input is not None else "an idle batch"
-        raise TimeoutError(
-            f"streaming drain {name!r} did not reach {want} within "
-            f"{AWAIT_SECONDS}s (committed {sum(rows_by_batch.values())} rows)"
-        )
-    return df.sparkSession.table(name)
+        if not done:
+            want = f"{total_input} rows" if total_input is not None else "an idle batch"
+            raise TimeoutError(
+                f"streaming drain {name!r} did not reach {want} within "
+                f"{AWAIT_SECONDS}s (committed {sum(rows_by_batch.values())} rows)"
+            )
+        return df.sparkSession.table(name)
 
 
 def foreach_batch_collect(df: DataFrame) -> DataFrame:

@@ -17,10 +17,14 @@ code change here, not a switch.
 Each query runs through its registry ``fn`` and a noop write, as in
 ``bench.py``, on ``get_spark()`` (cores from ``SPARK_GRAFT_CPUS``).
 One JSON line per query follows: the wall time, the top stages by
-executor run time and the layer metrics of
+executor run time, ``helpers_cpu_s`` and the layer metrics of
 ``perfbench/tracing.window_metrics`` (``driver.jobs``, ``exec.tasks``,
 ``exchange.*_mb``, ``plan.broadcast_joins`` ...) from one REST
-snapshot.
+snapshot. ``helpers_cpu_s`` is the CPU of the helper processes the JVM
+started and reaped during the query (the change in ``cutime + cstime``
+of ``/proc/<jvm>/stat``): without the native libhadoop, Hadoop's local
+file system forks a shell command for each permission set or symlink
+check, and that CPU shows in no Spark metric.
 """
 
 from __future__ import annotations
@@ -52,6 +56,7 @@ FACT_KEYS = {
 # 2^31 up to 2,000 copies.
 KEY_SHIFT = 1_000_000
 TOP_STAGES = 4
+CLK_TCK = os.sysconf("SC_CLK_TCK")
 
 
 def clone_dir(scale: int) -> str:
@@ -106,13 +111,25 @@ def _settled_snapshot(rest: tracing.SparkRest, lo: float) -> dict:
     return snap
 
 
+def reaped_children_cpu_s(pid: int) -> float:
+    """CPU seconds of the exited children that ``pid`` has waited for:
+    fields 16 and 17 (``cutime``, ``cstime``) of ``/proc/<pid>/stat``."""
+    with open(f"/proc/{pid}/stat") as f:
+        fields = f.read().rsplit(")", 1)[1].split()
+    # fields[0] is field 3 (state), so field n sits at index n - 3
+    return (int(fields[13]) + int(fields[14])) / CLK_TCK
+
+
 def probe(spark, spec, sf_dir: str) -> dict:
     """Run one query to a noop sink and report its wall time, top
-    stages and layer metrics."""
+    stages, helper-process CPU and layer metrics."""
+    jvm = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
     spark.catalog.clearCache()
+    h0 = reaped_children_cpu_s(jvm)
     t0 = time.time()
     materialize(spec.fn(spark, sf_dir))
     t1 = time.time()
+    helpers_cpu_s = reaped_children_cpu_s(jvm) - h0
     snap = _settled_snapshot(tracing.SparkRest(spark), t0)
     stages = [s for s in snap["stages"] if s["status"] != "SKIPPED"
               and t0 - 1e-3 <= (tracing.parse_ts(s.get("submissionTime")) or 0) <= t1 + 1e-3]
@@ -130,6 +147,7 @@ def probe(spark, spec, sf_dir: str) -> dict:
     return {
         "query": spec.name,
         "wall_s": round(t1 - t0, 2),
+        "helpers_cpu_s": round(helpers_cpu_s, 2),
         "top_stages": top,
         "layers": {k: round(v, 3) for k, v in layers.items()},
     }

@@ -47,3 +47,17 @@ def test_runtime_confs_applied_to_external_session(spark):
     ensure_session_configs(spark)
     for k, v in must_have.items():
         assert spark.conf.get(k) == v, k
+
+
+def test_sql_script_leaves_scripting_conf_as_found(spark, smoke_dir):
+    """sql_scripting_loop enables SQL scripting only for its own call:
+    the script runs at the call, so the frame it returns still collects
+    after the driver's session is put back as it was."""
+    from glue_etl_pyspark_spark.registry import load_all
+
+    key = "spark.sql.scripting.enabled"
+    before = spark.conf.get(key, None)
+    out = load_all()["sql_scripting_loop"].fn(spark, smoke_dir)
+    assert spark.conf.get(key, None) == before
+    (row,) = out.collect()
+    assert row.checks_run == 4 and row.total_hits > 0

@@ -9,7 +9,11 @@ whole query: its registry ``fn`` plus a noop write, in one job group.
 The pins are per fixture; a deliberate change to either loop
 re-measures them.
 
-Schema inference is not counted: ``io.load_table`` infers each table's
+The partitioned parquet sink is pinned too: it reads its output back
+with the schema it wrote, so a bare read (one footer schema-inference
+job per call) shows as one more job.
+
+Fixture schema inference is not counted: ``io.load_table`` infers each table's
 schema once per process, so ``count_jobs`` loads every table of the
 fixture before it counts. A count is then the same whichever tests ran
 before it.
@@ -71,3 +75,9 @@ def test_iterative_op_job_count(spark, sf_dir, name):
     if pins is None:
         pytest.skip(f"no job-count pin for {sf_dir}")
     assert count_jobs(spark, name, sf_dir) == pins[name]
+
+
+def test_partitioned_sink_reads_back_without_inference(spark, sf_dir):
+    """The partitioned write, then the pruned read and its aggregate
+    (3 jobs at sf0.01 and sf0.1; the bare read launched 4)."""
+    assert count_jobs(spark, "sink_partitioned_pruned", sf_dir) == 3

@@ -75,6 +75,7 @@ def test_probe_reports_jobs(probe, spark, clone):
 
     out = probe.probe(spark, load_all()["q1_pricing_summary"], clone)
     assert out["wall_s"] > 0
+    assert out["helpers_cpu_s"] >= 0
     assert out["layers"]["driver.jobs"] >= 1
     assert out["top_stages"] and out["top_stages"][0]["tasks"] >= 1
 
@@ -108,3 +109,18 @@ def test_clone_linked_into_a_deleted_checkout_exits(probe, smoke_dir, tmp_path):
     shutil.rmtree(gone)
     with pytest.raises(SystemExit, match="clone of another fixture"):
         probe.build_clone(smoke_dir, 1, out)
+
+
+def test_reaped_children_cpu_matches_os_times(probe):
+    """helpers_cpu_s reads the same reaped-child CPU the kernel reports
+    to the parent itself."""
+    import os
+    import subprocess
+    import sys
+
+    before, t0 = probe.reaped_children_cpu_s(os.getpid()), os.times()
+    subprocess.run([sys.executable, "-c", "sum(range(3 * 10**7))"], check=True)
+    after, t1 = probe.reaped_children_cpu_s(os.getpid()), os.times()
+    own = t1.children_user + t1.children_system - t0.children_user - t0.children_system
+    assert own > 0.1
+    assert after - before == pytest.approx(own, abs=2 / probe.CLK_TCK)

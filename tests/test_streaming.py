@@ -4,6 +4,7 @@ must match a batch aggregation."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from glue_etl_pyspark_spark.io import load_table
@@ -714,3 +715,91 @@ def test_run_available_now_times_out_loudly(spark, smoke_dir, monkeypatch):
         ops.drain_to_memory(agg, mode="complete")
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert not spark.streams.active
+
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def test_drain_pins_checkpoint_manager_and_unsets_it(spark, smoke_dir):
+    """A foreachBatch drain (the writer foreach_batch_collect starts)
+    plans its batches with the drain's checkpoint manager, and the
+    driver's session has the key unset again afterwards."""
+    from glue_etl_pyspark_spark.streaming import ops
+
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+    seen = []
+
+    def sink(batch_df, batch_id):
+        seen.append(batch_df.sparkSession.conf.get(_MANAGER_KEY, None))
+        batch_df.collect()  # a stateful batch must be consumed whole
+
+    agg = ops.events_stream(spark, smoke_dir).groupBy("event_type").count()
+    writer = agg.writeStream.foreachBatch(sink).outputMode("update")
+    ops.run_available_now(spark, writer, "manager-pin drain")
+    assert seen and set(seen) == {ops._DRAIN_CONFS[_MANAGER_KEY]}
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+
+
+def test_timed_out_drain_unsets_checkpoint_manager(spark, smoke_dir, monkeypatch):
+    from glue_etl_pyspark_spark.streaming import ops
+
+    monkeypatch.setattr(ops, "AWAIT_SECONDS", 0.001)
+    agg = ops.events_stream(spark, smoke_dir).groupBy("event_type").count()
+    with pytest.raises(TimeoutError, match="did not finish within"):
+        ops.foreach_batch_collect(agg)
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+    assert not spark.streams.active
+
+
+def _mem_sink_views(spark):
+    return [t.name for t in spark.catalog.listTables() if t.name.startswith("mem_sink_")]
+
+
+def test_memory_drain_drops_its_sink_view(spark, smoke_dir):
+    """The memory sink's temp view is dropped once the drain returns;
+    the returned frame holds the sink in its plan and still collects
+    the drained rows."""
+    from glue_etl_pyspark_spark.streaming.ops import drain_to_memory, events_stream
+
+    agg = events_stream(spark, smoke_dir).groupBy("event_type").count()
+    out = drain_to_memory(agg, mode="complete")
+    assert _mem_sink_views(spark) == []
+    batch = load_table(spark, smoke_dir, "events").groupBy("event_type").count()
+    assert _rows(out, ["event_type", "count"]) == _rows(batch, ["event_type", "count"])
+
+
+def test_timed_out_memory_drain_drops_its_sink_view(spark, smoke_dir, monkeypatch):
+    from glue_etl_pyspark_spark.streaming import ops
+
+    monkeypatch.setattr(ops, "AWAIT_SECONDS", 0.001)
+    agg = ops.events_stream(spark, smoke_dir).groupBy("event_type").count()
+    with pytest.raises(TimeoutError):
+        ops.drain_to_memory(agg, mode="complete")
+    assert _mem_sink_views(spark) == []
+
+
+def test_drain_resumes_a_file_context_checkpoint(spark, smoke_dir, tmp_path):
+    """A checkpoint written under Spark's default FileContext manager
+    (a hand-started query, as before drains pinned their manager)
+    resumes under the drain's manager: the second run reads only the
+    file added since, and every event lands exactly once."""
+    from glue_etl_pyspark_spark.streaming.ops import run_available_now
+
+    ev = load_table(spark, smoke_dir, "events")
+    src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
+    ev.filter("event_id % 2 = 0").write.parquet(src)
+    stream = spark.readStream.schema(ev.schema).parquet(src).select("event_id")
+    writer = (
+        stream.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+    )
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+    first = writer.trigger(availableNow=True).start()
+    assert first.awaitTermination(120)
+    ev.filter("event_id % 2 = 1").write.mode("append").parquet(src)
+    run_available_now(spark, writer, "resumed drain")
+    got = spark.read.parquet(out)
+    assert got.count() == ev.count()
+    assert got.select("event_id").distinct().count() == ev.count()
