@@ -9,13 +9,13 @@ from .text import (
     simhash64,
     tokenize_ws,
 )
-from .vectors import cosine_similarity, dot, l2_norm, l2_normalize
+from .vectors import cosine, dot, l2_norm, l2_normalize
 
 __all__ = [
     "dot",
     "l2_norm",
     "l2_normalize",
-    "cosine_similarity",
+    "cosine",
     "tokenize_ws",
     "bpe_ish_tokens",
     "shingles",

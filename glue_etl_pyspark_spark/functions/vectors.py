@@ -52,10 +52,23 @@ def l2_normalize(a: Column | str) -> Column:
     )
 
 
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity; NULL when either vector has zero norm."""
-    na, nb = l2_norm(a), l2_norm(b)
-    return F.when((na == 0) | (nb == 0), F.lit(None).cast("double")).otherwise(
+def cosine(a: Column | str, na: Column | str, b: Column | str, nb: Column | str) -> Column:
+    """Cosine of two vectors from their norms: ``dot(a, b) / (na * nb)``,
+    NULL when ``na * nb == 0``. The one pair cosine of the package.
+
+    ``na``/``nb`` must be norm columns projected with ``l2_norm`` below
+    the pair join, so each norm is computed once per vector and the pair
+    loop costs one dot and one divide. This is the IEEE tree of the DuckDB
+    oracles' ``_COS`` fragment (a raw dot over a materialized norm
+    product, NULLIF(na*nb, 0)). Pre-normalizing the vectors and dotting
+    the unit vectors is a different tree: sum((xi/na)*(yi/nb)) differs by
+    up to ~2e-15, enough to cross a 6 dp round or a 1e-9 floor grid cell
+    (cluster_medoids, CLAUDE.md). Guarding the product instead of each
+    factor nulls the same pairs: a nonzero double norm is at least
+    sqrt(5e-324) ~ 2.2e-162, so two of them never multiply to 0.
+    """
+    na, nb = _c(na), _c(nb)
+    return F.when(na * nb == 0, F.lit(None).cast("double")).otherwise(
         dot(a, b) / (na * nb)
     )
 

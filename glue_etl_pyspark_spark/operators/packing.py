@@ -98,13 +98,6 @@ def sharded_prefix_sum(
     return local.join(broadcast(bases), [*gs, "__shard"])
 
 
-def _with_shard_starts(
-    df: DataFrame, id_col: str, len_col: str, shard_span: int
-) -> DataFrame:
-    """The ungrouped prefix sum both packers share."""
-    return sharded_prefix_sum(df, id_col, len_col, shard_span)
-
-
 def pack_concat_chunk(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -117,7 +110,7 @@ def pack_concat_chunk(
     the document's first-token position inside its bin. A document
     whose span crosses a bin boundary continues into the next bin
     (token-level split, as in real packed pretraining)."""
-    out = _with_shard_starts(df, id_col, len_col, shard_span).withColumn(
+    out = sharded_prefix_sum(df, id_col, len_col, shard_span).withColumn(
         "__start", F.col("__base") + F.col("__local_start")
     )
     return out.select(

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from ..functions.vectors import cosine_similarity, dot, l2_norm, l2_normalize
+from ..functions.vectors import cosine, l2_norm, l2_normalize
 
 
 def knn_bruteforce(
@@ -44,15 +44,6 @@ def knn_bruteforce(
     the cross join); the corpus side never shuffles until the final
     per-query top-k, which carries only k rows per query partition.
     """
-    # Cosine tree = dot(raw)/(na*nb) with each side's norm materialized
-    # ONCE pre-join (zero-norm -> NULL, matching cosine_similarity's
-    # NULL-excluding semantics). This is the SAME IEEE expression tree
-    # as the DuckDB oracle's _COS fragment — pre-normalizing the
-    # vectors and dotting the unit vectors is NOT (sum((xi/na)*(yi/nb))
-    # differs by up to ~2e-15, enough to cross a 6 dp grid boundary;
-    # measured on cluster_medoids in round 6, CLAUDE.md rule). Per-pair
-    # cost is unchanged: one dot + one divide; norms are per-vector
-    # projections below the join, evaluated once.
     q = queries.select(
         F.col(query_id).alias("query_id"),
         F.col(query_vec).alias("__qv"),
@@ -69,26 +60,22 @@ def knn_bruteforce(
         .select(
             "query_id",
             "neighbor_id",
-            # guard on the norm PRODUCT, the oracle's exact predicate
-            # (NULLIF(na*nb, 0)): two subnormal norms can underflow
-            # the product to 0.0 with both factors nonzero, and the
-            # per-factor guard would then diverge (Spark Inf/NaN vs
-            # oracle NULL). Unreachable with real embeddings; matched
-            # so both engines null out the identical pair set.
-            F.when(
-                F.col("__qn") * F.col("__cn") == 0,
-                F.lit(None).cast("double"),
-            )
-            .otherwise(dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn")))
-            .alias("__sim"),
+            cosine("__qv", "__qn", "__cv", "__cn").alias("__sim"),
         )
     )
+    return _top_k(sims, "__sim", k, round_dp)
+
+
+def _top_k(sims: DataFrame, sim_col: str, k: int, round_dp: int | None) -> DataFrame:
+    """The k most similar neighbors per query of a (query_id,
+    neighbor_id, ``sim_col``) pair frame: rank by (sim DESC,
+    neighbor_id), keep rn <= k and emit (query_id, neighbor_id,
+    cos_sim, rn), with cos_sim rounded to ``round_dp`` places (None
+    keeps the raw double). NULL sims rank last."""
     w = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("neighbor_id")
+        F.col(sim_col).desc(), F.col("neighbor_id")
     )
-    out_sim = (
-        F.round(F.col("__sim"), round_dp) if round_dp is not None else F.col("__sim")
-    )
+    out_sim = F.col(sim_col) if round_dp is None else F.round(F.col(sim_col), round_dp)
     return (
         sims.withColumn("rn", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rn") <= k)
@@ -102,15 +89,11 @@ def _nearest_cents(
     """ids of the n nearest centroids per input row (broadcast join;
     cosine, cent_id tie-break). cents: (cent_id, centroid).
 
-    Per-pair work is ONE dot product: each side's norm is computed once
-    per vector (a projected column below the join, so Catalyst
-    evaluates it pre-join) and the division reuses it — bit-identical
-    to ``cosine_similarity(vec, cent)`` (same dot, same norms, same
-    ``d/(na*nb)`` order), which keeps the DuckDB-oracled trainer
-    hash-stable, but 1 interpreted array-aggregate per pair instead of
-    3. The 10x scale probe measured the unfactored version at 275 s
-    for one 12.9M-pair assignment pass; this is the expression-path
-    fix.
+    Per-pair work is ONE dot product (``functions.vectors.cosine``):
+    each side's norm is a projected column below the join, so Catalyst
+    evaluates it once per vector — 1 interpreted array-aggregate per
+    pair instead of 3. The 10x scale probe measured the per-pair-norm
+    version at 275 s for one 12.9M-pair assignment pass.
 
     Nearest-1 (the bulk assignment case) aggregates with ``min_by``
     over (-cos, cent_id) — map-side partial aggregation shuffles n
@@ -130,13 +113,7 @@ def _nearest_cents(
     sims = left.crossJoin(cent).select(
         F.col(id_out),
         "cent_id",
-        # product guard == the oracle family's NULLIF(na*nb, 0)
-        F.when(
-            F.col("__n") * F.col("__cn") == 0,
-            F.lit(None).cast("double"),
-        )
-        .otherwise(dot(vec_col, "__cent") / (F.col("__n") * F.col("__cn")))
-        .alias("__cs"),
+        cosine(vec_col, "__n", "__cent", "__cn").alias("__cs"),
     )
     if n == 1:
         key = F.struct(
@@ -297,26 +274,28 @@ def ivf_search(
     Candidate generation is an equi-join on cent_id (hash-
     partitionable); per-query work is ~nprobe·|corpus|/n_centroids.
     Emits (query_id, neighbor_id, cos_sim, rn)."""
-    q = queries.select(F.col(query_id).alias("query_id"), F.col(vec).alias("__qv"))
+    q = queries.select(
+        F.col(query_id).alias("query_id"),
+        F.col(vec).alias("__qv"),
+        l2_norm(vec).alias("__qn"),
+    )
     probes = _nearest_cents(
         q.select("query_id", F.col("__qv").alias("__v")), centroids,
         "query_id", "__v", nprobe,
     )
     cands = (
-        probes.join(members, "cent_id")
+        probes.join(members.withColumn("__mn", l2_norm("vec")), "cent_id")
         .join(broadcast(q), "query_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         # a corpus vector can sit in only one cluster, so (query,
         # neighbor) pairs are already distinct across probes
-        .select("query_id", "neighbor_id", cosine_similarity("__qv", "vec").alias("__sim"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            cosine("__qv", "__qn", "vec", "__mn").alias("__sim"),
+        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__sim").desc(), F.col("neighbor_id"))
-    out_sim = F.round(F.col("__sim"), round_dp) if round_dp is not None else F.col("__sim")
-    return (
-        cands.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", out_sim.alias("cos_sim"), "rn")
-    )
+    return _top_k(cands, "__sim", k, round_dp)
 
 
 def ivf_save(centroids: DataFrame, members: DataFrame, path: str) -> None:
@@ -413,12 +392,7 @@ def lsh_knn(
             (1 - F.col("euclid") * F.col("euclid") / 2).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rn")
-    )
+    return _top_k(sims, "cos_sim", k, 6)
 
 
 def embedding_dup_pairs(
@@ -452,6 +426,7 @@ def embedding_dup_pairs(
         n = df.select(
             F.col(id_col).alias("id"),
             F.col(vec).alias("__v"),
+            l2_norm(vec).alias("__n"),
             array_to_vector(l2_normalize(vec)).alias("features"),
         )
         lsh = BucketedRandomProjectionLSH(
@@ -470,38 +445,28 @@ def embedding_dup_pairs(
             .select(
                 F.col("datasetA.id").alias("id_a"),
                 F.col("datasetB.id").alias("id_b"),
-                cosine_similarity("datasetA.__v", "datasetB.__v").alias("cos_sim"),
+                cosine(
+                    "datasetA.__v", "datasetA.__n", "datasetB.__v", "datasetB.__n"
+                ).alias("cos_sim"),
             )
             .filter(F.col("cos_sim") >= min_cos)
             .select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
         )
     if method != "allpairs":
         raise ValueError(f"unknown method {method!r} (allpairs|lsh)")
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec).alias("__va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec).alias("__vb"))
+    a = df.select(
+        F.col(id_col).alias("id_a"), F.col(vec).alias("__va"), l2_norm(vec).alias("__na")
+    )
+    b = df.select(
+        F.col(id_col).alias("id_b"), F.col(vec).alias("__vb"), l2_norm(vec).alias("__nb")
+    )
     return (
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", cosine_similarity("__va", "__vb"))
+        .withColumn("cos_sim", cosine("__va", "__na", "__vb", "__nb"))
         .filter(F.col("cos_sim") >= min_cos)
         .select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
     )
-
-
-__all__ = [
-    "knn_bruteforce",
-    "ivf_knn",
-    "ivf_build",
-    "ivf_search",
-    "ivf_save",
-    "ivf_load",
-    "lsh_knn",
-    "embedding_dup_pairs",
-    "dot",
-    "l2_norm",
-    "l2_normalize",
-    "cosine_similarity",
-]
 
 
 def knn_bruteforce_batch(
@@ -527,7 +492,7 @@ def knn_bruteforce_batch(
 
     # Zero-norm guard: norm 0 -> divide yields NaN, and NaN sorts FIRST
     # under Spark's descending double order (NaN > any value), poisoning
-    # top-k — while the expression twin (cosine_similarity) returns NULL
+    # top-k — while the expression path (functions.vectors.cosine) returns NULL
     # (excluded). Normalizing by max(norm, tiny) then dropping non-finite
     # sims matches the NULL-excluding expression semantics exactly.
     def _unit(m: "np.ndarray") -> "np.ndarray":
@@ -536,6 +501,10 @@ def knn_bruteforce_batch(
         return out
 
     q = queries.select(F.col(query_id).alias("qid"), F.col(vec).alias("qv")).toPandas()
+    if q.empty:
+        return corpus.sparkSession.createDataFrame(
+            [], "query_id bigint, neighbor_id bigint, cos_sim double, rn bigint"
+        )
     qm = _unit(np.stack([np.asarray(v, dtype=np.float64) for v in q["qv"]]))
     qids = q["qid"].to_numpy()
     bq = corpus.sparkSession.sparkContext.broadcast((qids, qm))
@@ -561,9 +530,17 @@ def knn_bruteforce_batch(
         .mapInPandas(batches, schema="query_id bigint, neighbor_id bigint, __sim double")
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__sim").desc(), F.col("neighbor_id"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", F.round("__sim", round_dp).alias("cos_sim"), "rn")
-    )
+    return _top_k(sims, "__sim", k, round_dp)
+
+
+__all__ = [
+    "knn_bruteforce",
+    "knn_bruteforce_batch",
+    "ivf_knn",
+    "ivf_build",
+    "ivf_search",
+    "ivf_save",
+    "ivf_load",
+    "lsh_knn",
+    "embedding_dup_pairs",
+]

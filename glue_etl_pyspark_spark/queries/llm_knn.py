@@ -11,14 +11,12 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..operators.multimodal import attach_media, extract_features, resize_media
-from ..functions.vectors import cosine_similarity
+from ..functions.vectors import cosine, l2_norm
 from ..operators.similarity import (
-    dot,
     embedding_dup_pairs,
     ivf_build,
     ivf_knn,
     knn_bruteforce,
-    l2_norm,
     lsh_knn,
 )
 from ..registry import query
@@ -768,14 +766,16 @@ def knn_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("srn") <= _PQ_SHORTLIST)
         .select("query_id", "neighbor_id")
     )
-    from ..functions.vectors import cosine_similarity
-
-    q = e.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    n = e.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"))
+    q = e.select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), l2_norm("v").alias("qn")
+    )
+    n = e.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"), l2_norm("v").alias("nn")
+    )
     rer = (
         shortlist.join(F.broadcast(q), "query_id")
         .join(n, "neighbor_id")
-        .withColumn("cs", cosine_similarity("qv", "nv"))
+        .withColumn("cs", cosine("qv", "qn", "nv", "nn"))
     )
     wr = Window.partitionBy("query_id").orderBy(F.desc("cs"), "neighbor_id")
     return (
@@ -970,15 +970,21 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, members = ivf_build(corpus, centroid_stride=31, lloyd_iters=2)
     m = members.select("cent_id", F.col("neighbor_id").alias("vec_id"), "vec")
     a = m.select(
-        "cent_id", F.col("vec_id").alias("id_a"), F.col("vec").alias("__va")
+        "cent_id",
+        F.col("vec_id").alias("id_a"),
+        F.col("vec").alias("__va"),
+        l2_norm("vec").alias("__na"),
     )
     b = m.select(
-        "cent_id", F.col("vec_id").alias("id_b"), F.col("vec").alias("__vb")
+        "cent_id",
+        F.col("vec_id").alias("id_b"),
+        F.col("vec").alias("__vb"),
+        l2_norm("vec").alias("__nb"),
     )
     dups = (
         a.join(b, "cent_id")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cs", cosine_similarity("__va", "__vb"))
+        .withColumn("cs", cosine("__va", "__na", "__vb", "__nb"))
         .filter(F.col("cs") >= _SEMDEDUP_TAU)
         .select(F.col("id_b").alias("vec_id"))
         .distinct()
@@ -1159,13 +1165,9 @@ def knn_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same scale shape as knn_bruteforce: anchors broadcast, corpus
     streams, norms factored out of the pair loop (materialized
-    columns; the pair cosine is dot(raw)/(na*nb) — the oracle's exact
-    IEEE tree, per the cluster_medoids precedent: a pre-normalized
-    sum evaluates a different tree that can split a rounding-grid
-    boundary), WindowGroupLimit top-k; the IVF path swaps in for
+    columns under ``functions.vectors.cosine``, the oracle's exact
+    IEEE tree), WindowGroupLimit top-k; the IVF path swaps in for
     corpus-scale anchor sets."""
-    from ..operators.similarity import dot, l2_norm
-
     e = load_table(spark, sf_dir, "embeddings")
     ev = e.select(
         "vec_id", "label", F.col("embedding").alias("__v"),
@@ -1188,13 +1190,7 @@ def knn_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("q_label") != F.col("n_label"))
         .select(
             "query_id", "q_label", "neg_id", "n_label",
-            # product guard == the oracle's NULLIF(na*nb, 0) predicate
-            F.when(
-                F.col("__qn") * F.col("__cn") == 0,
-                F.lit(None).cast("double"),
-            )
-            .otherwise(dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn")))
-            .alias("__sim"),
+            cosine("__qv", "__qn", "__cv", "__cn").alias("__sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1249,11 +1245,8 @@ def knn_mutual_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the bounded anchor set (even-label, vec_id < 300) is the
     documented all-pairs correctness anchor — the production path
     blocks through IVF buckets exactly like knn_ivf. Norms factored
-    out as materialized columns (pair cosine = dot(raw)/(na*nb), the
-    oracle's exact IEEE tree — cluster_medoids precedent); both
-    rankings reuse the single sims exchange."""
-    from ..operators.similarity import dot, l2_norm
-
+    out as materialized columns under ``functions.vectors.cosine``;
+    both rankings reuse the single sims exchange."""
     e = load_table(spark, sf_dir, "embeddings")
     ev = e.select(
         "vec_id", "label", F.col("embedding").alias("__v"),
@@ -1272,13 +1265,7 @@ def knn_mutual_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims = b.crossJoin(F.broadcast(a)).select(
         "a_id",
         "b_id",
-        # product guard == the oracle's NULLIF(na*nb, 0) predicate
-        F.when(
-            F.col("__an") * F.col("__bn") == 0,
-            F.lit(None).cast("double"),
-        )
-        .otherwise(dot("__av", "__bv") / (F.col("__an") * F.col("__bn")))
-        .alias("__cs"),
+        cosine("__av", "__an", "__bv", "__bn").alias("__cs"),
     )
     wa = Window.partitionBy("a_id").orderBy(F.col("__cs").desc(), F.col("b_id"))
     wb = Window.partitionBy("b_id").orderBy(F.col("__cs").desc(), F.col("a_id"))
@@ -1333,12 +1320,10 @@ def knn_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     6dp-rounded sims (identical expression both engines).
 
     Scale: same bounded-anchor all-pairs anchor as the knn family
-    (norms factored out as materialized columns, pair cosine =
-    dot(raw)/(na*nb) — the oracle's exact IEEE tree); corpus-scale
-    mining swaps in the IVF bucketed path for candidate generation,
-    the ranking shape is unchanged."""
-    from ..operators.similarity import dot, l2_norm
-
+    (norms factored out as materialized columns under
+    ``functions.vectors.cosine``); corpus-scale mining swaps in the
+    IVF bucketed path for candidate generation, the ranking shape is
+    unchanged."""
     e = load_table(spark, sf_dir, "embeddings")
     ev = e.select(
         "vec_id", "label", F.col("embedding").alias("__v"),
@@ -1364,13 +1349,7 @@ def knn_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a_label",
             "cand_id",
             (F.col("c_label") == F.col("a_label")).alias("is_same"),
-            # product guard == the oracle's NULLIF(na*nb, 0) predicate
-            F.when(
-                F.col("__qn") * F.col("__cn") == 0,
-                F.lit(None).cast("double"),
-            )
-            .otherwise(dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn")))
-            .alias("__cs"),
+            cosine("__qv", "__qn", "__cv", "__cn").alias("__cs"),
         )
     )
     w = Window.partitionBy("anchor_id", "is_same").orderBy(
@@ -1502,13 +1481,9 @@ def cluster_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_members")
     )
 
-    # Norms factored OUT as columns; the pair cosine is dot(raw)/(na*nb)
-    # — the SAME IEEE expression tree as the oracle's _COS (sum of raw
-    # products over a materialized norm product).  The earlier
-    # pre-normalized form (sum of (xi/na)*(yi/nb)) evaluates a different
-    # tree that lands ~0.04% of pair cells on a different floor(x*1e9)
-    # grid cell (divergence up to 1.4e-15) — a latent driver-hash flake
-    # even though both scale factors happened to pass.
+    # Norms factored OUT as columns under functions.vectors.cosine, the
+    # oracle's _COS tree: a pre-normalized sum lands ~0.04% of pair cells
+    # on a different floor(x*1e9) grid cell.
     ev = e.select(
         "vec_id",
         F.col("embedding").alias("__v"),
@@ -1532,22 +1507,10 @@ def cluster_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "cent_id",
             "id_a",
-            # zero-norm guard (mirrors the oracle's NULLIF(na*nb,0)
-            # — guard the PRODUCT, not each factor, so a subnormal
-            # underflow nulls the same pair set on both engines): a
-            # 0-norm member would make 0/0=NaN and CAST(floor(NaN))
-            # ERRORS under ANSI; NULL drops out of the SUM on both.
-            F.when(
-                F.col("__na") * F.col("__nb") == 0,
-                F.lit(None).cast("bigint"),
-            )
-            .otherwise(
-                F.floor(
-                    dot("__va", "__vb")
-                    / (F.col("__na") * F.col("__nb"))
-                    * F.lit(1e9)
-                ).cast("bigint")
-            )
+            # a 0-norm member's NULL cosine drops out of the SUM on both
+            # engines (0/0 = NaN would make CAST(floor(NaN)) error under ANSI)
+            F.floor(cosine("__va", "__na", "__vb", "__nb") * F.lit(1e9))
+            .cast("bigint")
             .alias("c9"),
         )
     )

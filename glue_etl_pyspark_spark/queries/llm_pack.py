@@ -239,7 +239,7 @@ def knn_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     both ranks tie-break on neighbor_id), so the whole two-stage
     pipeline is hash-oracled — unlike LSH-style candidate generation,
     compression loss here is verifiable, not just recall-gated."""
-    from ..functions.vectors import cosine_similarity, dequantize_int8
+    from ..functions.vectors import cosine, dequantize_int8, l2_norm
     from ..operators.similarity import knn_bruteforce
     from pyspark.sql import Window
     from pyspark.sql.functions import broadcast
@@ -260,14 +260,22 @@ def knn_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage1 = knn_bruteforce(q, dq, k=_OVERFETCH, round_dp=None).select(
         "query_id", "neighbor_id"
     )
-    fv_c = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv"))
-    fv_q = e.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"))
+    fv_c = e.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cv"),
+        l2_norm("embedding").alias("__cn"),
+    )
+    fv_q = e.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qv"),
+        l2_norm("embedding").alias("__qn"),
+    )
     rerank = (
         stage1.join(fv_c, "neighbor_id")
         .join(broadcast(fv_q), "query_id")
         .select(
             "query_id", "neighbor_id",
-            cosine_similarity("__qv", "__cv").alias("__cs"),
+            cosine("__qv", "__qn", "__cv", "__cn").alias("__cs"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("__cs").desc(), "neighbor_id")

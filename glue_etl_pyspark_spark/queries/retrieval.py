@@ -410,17 +410,18 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- dense leg (brute-force anchor against the query embedding) ---
-    from ..functions.vectors import cosine_similarity
+    from ..functions.vectors import cosine, l2_norm
 
-    q = e.filter(F.col("vec_id") == _RRF_QVEC).select(
-        F.col("embedding").alias("qv")
+    ev = e.withColumn("__n", l2_norm("embedding"))
+    q = ev.filter(F.col("vec_id") == _RRF_QVEC).select(
+        F.col("embedding").alias("qv"), F.col("__n").alias("qn")
     )
     sims = (
-        e.filter(F.col("vec_id") != _RRF_QVEC)
+        ev.filter(F.col("vec_id") != _RRF_QVEC)
         .crossJoin(F.broadcast(q))
         .select(
             F.col("vec_id").alias("doc_id"),
-            cosine_similarity("embedding", "qv").alias("cs"),
+            cosine("embedding", "__n", "qv", "qn").alias("cs"),
         )
     )
     wv = Window.orderBy(F.desc(F.round(F.col("cs"), 6)), "doc_id")

@@ -65,6 +65,22 @@ def query(name: str, oracle: str | None = None, category: str = "relational"):
 DRIVER_REWORKED: dict[str, int] = {
     "events_winsorize_bounds": 17,
     "events_rolling_hourly": 17,
+    # pair cosine routed through functions.vectors.cosine
+    "knn_bruteforce_cosine": 17,
+    "knn_bruteforce_numpy": 17,
+    "knn_ivf": 17,
+    "knn_ivf_clustered": 17,
+    "knn_ivf_persisted": 17,
+    "knn_label_purity": 17,
+    "embedding_dedup_pairs": 17,
+    "knn_pq_rerank": 17,
+    "knn_int8_rerank": 17,
+    "dedup_semantic_clusters": 17,
+    "knn_hard_negatives": 17,
+    "knn_mutual_nn": 17,
+    "knn_triplet_mining": 17,
+    "cluster_medoids": 17,
+    "hybrid_search_rrf": 17,
 }
 
 

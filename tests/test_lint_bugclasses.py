@@ -35,6 +35,11 @@ silently reintroduce them (VERDICT r6 item 6):
    sizes the state stores) and temporary confs go through
    ``session.pinned_confs``, which restores them.
 
+7. A hand-copied pair cosine — ``dot(`` or a norm-product zero guard
+   (``na * nb == 0,``) outside ``functions/vectors.py``. Every pair
+   cosine goes through ``functions.vectors.cosine`` over norms
+   projected once per vector, the oracle's ``_COS`` tree.
+
 The lints run over the query/operator sources as text; known-safe
 sites are allowlisted by (path suffix, line-content marker) so a line
 move doesn't break the pin but a NEW occurrence fails loudly.
@@ -256,3 +261,40 @@ def test_one_stream_drain_path():
 )
 def test_hand_rolled_drain_lint(line, bad):
     assert bool(_HAND_ROLLED_DRAIN.search(line)) is bad
+
+
+# a dot product or a norm-product zero guard: the pieces of a pair cosine
+_HAND_COPIED_COSINE = re.compile(
+    r"(?<![\w.])dot\(|\*\s*(F\.col\([^()]*\)|\w+)\s*==\s*0\s*,"
+)
+_COSINE_OWNER = PKG / "functions" / "vectors.py"
+
+
+def test_one_pair_cosine():
+    hits = [
+        (str(p.relative_to(PKG)), i, line.strip())
+        for p in sorted(PKG.rglob("*.py"))
+        if p != _COSINE_OWNER
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if _HAND_COPIED_COSINE.search(line)
+    ]
+    assert not hits, (
+        "hand-copied pair cosine — use functions.vectors.cosine over "
+        f"l2_norm columns projected below the join (CLAUDE.md rule): {hits}"
+    )
+
+
+@pytest.mark.parametrize(
+    "line, bad",
+    [
+        ('.otherwise(dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn")))', True),
+        ('F.col("__qn") * F.col("__cn") == 0,', True),
+        ("F.when(na * nb == 0, F.lit(None).cast(\"double\"))", True),
+        ('cosine("__qv", "__qn", "__cv", "__cn").alias("__sim")', False),
+        ('F.when(F.col("event_id") % 7 == 0, F.lit(1))', False),
+        ("cm @ qm_.T  # np.dot(cm, qm_.T)", False),
+        ('(F.floor(dot * 1e9) >= 0).cast("bigint")', False),
+    ],
+)
+def test_hand_copied_cosine_lint(line, bad):
+    assert bool(_HAND_COPIED_COSINE.search(line)) is bad

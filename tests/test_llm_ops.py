@@ -392,15 +392,25 @@ def test_trigram_fast_extraction_is_bitexact_twin(spark, sf_dir):
 
 def test_knn_bruteforce_tree_matches_oracle_cosine_bitexact(spark, sf_dir):
     """knn_bruteforce's sim tree must be BIT-IDENTICAL (no rounding) to
-    cosine_similarity — i.e. dot(raw)/(na*nb) with norms materialized
-    once, the same IEEE tree the DuckDB _COS oracle evaluates. The
-    pre-r7 form (pre-normalize then dot unit vectors) differs by up to
-    ~2e-15, which crosses 6 dp grid boundaries (the cluster_medoids r6
-    failure class, CLAUDE.md rule); this pin makes a regression to that
-    tree a hard failure rather than a measured-safe residual."""
-    from glue_etl_pyspark_spark.functions.vectors import cosine_similarity
+    dot(raw)/(norm*norm) with double accumulation, the IEEE tree the
+    DuckDB _COS oracle evaluates. The reference is written out here,
+    without functions.vectors, so the pin does not compare the helper
+    with itself. The pre-r7 form (pre-normalize then dot unit vectors)
+    differs by up to ~2e-15, which crosses 6 dp grid boundaries (the
+    cluster_medoids r6 failure class, CLAUDE.md rule); this pin makes a
+    regression to that tree a hard failure rather than a measured-safe
+    residual."""
     from glue_etl_pyspark_spark.io import load_table
     from glue_etl_pyspark_spark.operators.similarity import knn_bruteforce
+
+    def ref_dot(a, b):
+        prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
+        return F.aggregate(prods, F.lit(0.0), lambda s, x: s + x)
+
+    def ref_norm(a):
+        return F.sqrt(
+            F.aggregate(a, F.lit(0.0), lambda s, x: s + x.cast("double") * x.cast("double"))
+        )
 
     e = load_table(spark, sf_dir, "embeddings")
     got = knn_bruteforce(
@@ -412,12 +422,65 @@ def test_knn_bruteforce_tree_matches_oracle_cosine_bitexact(spark, sf_dir):
         "query_id",
         "neighbor_id",
         "got_sim",
-        cosine_similarity("__q", "__c").alias("want_sim"),
+        (
+            ref_dot(F.col("__q"), F.col("__c"))
+            / (ref_norm(F.col("__q")) * ref_norm(F.col("__c")))
+        ).alias("want_sim"),
     )
     diverged = ref.filter(
         F.col("got_sim").cast("string") != F.col("want_sim").cast("string")
     ).count()
     assert diverged == 0, f"{diverged} pairs diverge from the oracle cosine tree"
+
+
+def test_cosine_zero_vector_is_null_like_oracle(spark):
+    """functions.vectors.cosine returns NULL for a pair with a zero
+    vector on either side, exactly where DuckDB's _COS_SAFE returns
+    NULL, and the same double elsewhere."""
+    import duckdb
+
+    from glue_etl_pyspark_spark.functions.vectors import cosine, l2_norm
+    from glue_etl_pyspark_spark.queries.llm_knn import _COS_SAFE
+
+    pairs = [
+        (0, [0.0, 0.0], [1.0, 2.0]),
+        (1, [3.0, 4.0], [0.0, 0.0]),
+        (2, [0.0, 0.0], [0.0, 0.0]),
+        (3, [3.0, 4.0], [1.0, 2.0]),
+    ]
+    df = spark.createDataFrame(pairs, "id int, a array<double>, b array<double>")
+    got = {
+        r.id: r.cs
+        for r in df.select("id", "a", "b", l2_norm("a").alias("na"), l2_norm("b").alias("nb"))
+        .select("id", cosine("a", "na", "b", "nb").alias("cs"))
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id INTEGER, a DOUBLE[], b DOUBLE[])")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", pairs)
+    want = dict(
+        con.execute(
+            f"SELECT id, {_COS_SAFE.format(a='a', b='b')} FROM t, range(1, 3) r(i) GROUP BY id"
+        ).fetchall()
+    )
+    assert got == want
+    assert [got[i] is None for i in range(4)] == [True, True, True, False]
+
+
+def test_knn_paths_return_no_rows_for_no_queries(spark, sf_dir):
+    """An empty query set yields an empty top-k frame on both the
+    expression path and the numpy GEMM path, with the same columns."""
+    from glue_etl_pyspark_spark.io import load_table
+    from glue_etl_pyspark_spark.operators.similarity import (
+        knn_bruteforce,
+        knn_bruteforce_batch,
+    )
+
+    e = load_table(spark, sf_dir, "embeddings")
+    none = e.filter(F.col("vec_id") < 0)
+    expr, batch = knn_bruteforce(none, e), knn_bruteforce_batch(none, e)
+    assert expr.columns == batch.columns == ["query_id", "neighbor_id", "cos_sim", "rn"]
+    assert expr.count() == 0 and batch.count() == 0
 
 
 def test_greedy_packing_properties(spark, sf_dir):
